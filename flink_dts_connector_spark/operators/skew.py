@@ -15,6 +15,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def row_salt(salt: int) -> Column:
+    """Per-row salt in ``[0, salt)``: ``xxhash64`` of the row's
+    ``monotonically_increasing_id()``. It depends on the row's position in
+    its partition, not on its content, so it is reproducible for the same
+    input partitioning and spreads rows that are equal in every column."""
+    return F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt)).cast("int")
+
+
 def salted_join(
     big: DataFrame,
     small: DataFrame,
@@ -23,9 +31,14 @@ def salted_join(
     salt: int = 8,
 ) -> DataFrame:
     """Join a skew-keyed big side with a small side too large to broadcast:
-    big rows get a random-but-deterministic salt (hash of all columns mod
-    ``salt``); small rows replicate ``salt`` times; the join key becomes
-    (key, salt) — hot keys spread across ``salt`` reducers.
+    big rows get a per-row-id salt (:func:`row_salt`); small rows replicate
+    ``salt`` times; the join key becomes (key, salt) — hot keys spread
+    across ``salt`` reducers, even when every row of a hot key is identical.
+
+    The salt depends on the row's position in its partition, not on its
+    content: reproducible for the same input partitioning (as in
+    :func:`two_phase_agg`); salting by content would give identical rows
+    one salt and put a hot key of them back on one reducer.
 
     Result is row-identical to ``big.join(small, on, how)`` (tested in
     tests/test_skew.py); cost is small-side replication ×salt.
@@ -43,9 +56,7 @@ def salted_join(
             f"would duplicate ×salt under right/full outer joins (allowed: inner, "
             f"left, left_semi, left_anti)"
         )
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt)).cast("int")
-    )
+    big_s = big.withColumn("_salt", row_salt(salt))
     small_s = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
@@ -68,9 +79,7 @@ def two_phase_agg(
     from a per-row id, not the keys — salting by key would put a hot key
     back on one reducer.
     """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt))
-    )
+    salted = df.withColumn("_salt", row_salt(salt))
     phase1 = salted.groupBy(*keys, "_salt").agg(
         *[expr.alias(f"_p_{name}") for name, (expr, _) in aggs.items()]
     )

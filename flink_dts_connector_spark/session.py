@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_driver_memory() -> str:
+    """Half the box's physical memory, capped at 48g. The heap grows lazily
+    toward ``-Xmx``, so a heap larger than the box gets the driver JVM killed
+    by the kernel's OOM killer mid-run; the other half covers the JVM's
+    off-heap memory and the Python driver and workers."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(48 << 10, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "flink-dts-connector-spark",
     cpus: int | str | None = None,
@@ -60,8 +72,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Oracle comparison: duckdb timestamps are UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
-        # local[N] = driver-only JVM; give it the box's memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # local[N] = driver-only JVM; give it the box's memory, not more.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Streaming checkpoint-file checksums (new in Spark 4.1, default on)

@@ -31,6 +31,44 @@ def test_salted_left_join_keeps_unmatched(spark):
     assert out == {(1, "x"), (2, "y"), (99, None)}
 
 
+def test_salted_join_spreads_identical_hot_rows(spark):
+    """A hot key made of rows that are equal in every column must still
+    spread over more than one reducer (the salt comes from a per-row id, not
+    the row's content), and the result must stay row-identical to the plain
+    join. AQE and broadcast are off and there are exactly ``salt`` shuffle
+    partitions, so ``spark_partition_id()`` of the output is the reducer."""
+    salt = 16
+    big = spark.createDataFrame([(0, "x")] * 2000, "k long, v string")
+    small = spark.createDataFrame([(0, "hot"), (1, "cold")], "k long, w string")
+
+    conf = spark.conf
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.shuffle.partitions",
+    )
+    saved = {k: conf.get(k, None) for k in keys}
+    try:
+        conf.set("spark.sql.adaptive.enabled", "false")
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        conf.set("spark.sql.shuffle.partitions", str(salt))
+        salted = salted_join(big, small, on="k", salt=salt)
+        reducers = {
+            r["p"]
+            for r in salted.select(F.spark_partition_id().alias("p")).distinct().collect()
+        }
+        got = sorted(map(tuple, salted.select("k", "v", "w").collect()))
+        want = sorted(map(tuple, big.join(small, "k").select("k", "v", "w").collect()))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+    assert len(reducers) > 1, reducers
+    assert got == want and len(got) == 2000
+
+
 def test_salted_join_rejects_outer_modes(spark):
     import pytest
 
@@ -213,7 +251,8 @@ def test_skew_drill_salted_join_beats_straggler(spark):
                 conf.set(k, v)
 
     # the plain join is straggler-bound (one task carries >n_big/2 rows);
-    # salting spreads the hot key over `salt` reducers. Require a real win
-    # but leave 2× headroom under the measured ~5× so box noise can't flake.
+    # salting spreads the hot key over `salt` reducers. Require a real win;
+    # SCALING.md §skew-drill records the measured wall ratios at this size
+    # (~1.6× on 8 cores, less on 4) and the retry above absorbs box noise.
     t_salted, t_plain = attempts[-1]
     assert t_salted < t_plain * 0.8, attempts

@@ -78,6 +78,10 @@ def test_transform_with_state_in_pandas(spark, sf_dir):
     except ImportError:
         pytest.skip("transformWithStateInPandas unavailable")
 
+    # the Python worker imports pyspark/sql/streaming/proto/StateMessage_pb2.py,
+    # which needs protobuf (PySpark lists it only under its `connect` extra)
+    pytest.importorskip("google.protobuf")
+
     from flink_dts_connector_spark.session import load_table
     from flink_dts_connector_spark.streaming.runner import read_stream_table
 
@@ -100,43 +104,35 @@ def test_transform_with_state_in_pandas(spark, sf_dir):
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    ev = read_stream_table(spark, sf_dir, "events").select("user_id", "value", "ts")
-    out = (
-        ev.groupBy("user_id")
-        .transformWithStateInPandas(
-            MaxProcessor(),
-            outputStructType="user_id bigint, max_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    import tempfile
-    import uuid as _uuid
-
-    name = f"tws_{_uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdcs_tws_"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
-    except Exception as e:  # environment limitation, not a code defect
-        if "driver worker exited unexpectedly" in str(e):
-            pytest.skip(
-                "transformWithStateInPandas driver-worker handshake crashes in "
-                "this container (even for a stateless processor); stateful-op "
-                "coverage is provided by applyInPandasWithState "
-                "(test_stateful_running_counts)"
+        ev = read_stream_table(spark, sf_dir, "events").select("user_id", "value", "ts")
+        out = (
+            ev.groupBy("user_id")
+            .transformWithStateInPandas(
+                MaxProcessor(),
+                outputStructType="user_id bigint, max_value double",
+                outputMode="Update",
+                timeMode="None",
             )
-        raise
-    if prev is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        )
+        import tempfile
+        import uuid as _uuid
+
+        name = f"tws_{_uuid.uuid4().hex[:8]}"
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="fdcs_tws_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        else:
+            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     got = {
         r["user_id"]: r["mx"]
         for r in spark.table(name).groupBy("user_id").agg(F.max("max_value").alias("mx")).collect()

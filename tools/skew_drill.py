@@ -32,7 +32,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from flink_dts_connector_spark.operators.skew import salted_join
+    from flink_dts_connector_spark.operators.skew import row_salt, salted_join
     from flink_dts_connector_spark.session import get_spark
 
     spark = get_spark(
@@ -60,7 +60,7 @@ def main() -> None:
         return hist[-1], hist[len(hist) // 2]
 
     plain_max, plain_med = max_med(big, "k")
-    salted = big.withColumn("_salt", F.pmod(F.xxhash64("k", "v"), F.lit(salt)).cast("int"))
+    salted = big.withColumn("_salt", row_salt(salt))
     salt_max, salt_med = max_med(salted, "k", "_salt")
     print(
         f"n_big={n_big:,} salt={salt}: max task input plain={plain_max:,} "
