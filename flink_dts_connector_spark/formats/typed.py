@@ -9,15 +9,18 @@ UPDATE becomes two rows (UPDATE_BEFORE + UPDATE_AFTER, mode declared at
 
 Spark has no RowKind, so the changelog kind is an explicit ``op`` column
 (I/UB/UA/D) — downstream operators consume it with the changelog kit
-(`operators/changelog.py`). Everything here is built-in column expressions
-(map access + cast + explode): JVM-side, codegen'd, no Python in the path.
+(`operators/changelog.py`). Everything here is built-in SQL expressions
+(map access + cast + explode), built as SQL text with one JVM parse per
+step (`sqltext.py`) rather than one py4j Column call per field; they run
+JVM-side, codegen'd, with no Python in the path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from flink_dts_connector_spark.sqltext import ident, lit, sql_type
 
 #: changelog kinds, parity with Flink RowKind shortStrings
 OP_INSERT, OP_UPDATE_BEFORE, OP_UPDATE_AFTER, OP_DELETE = "I", "UB", "UA", "D"
@@ -53,45 +56,33 @@ def project_table(
     UPDATE rows double into UB/UA via an array+explode — one narrow
     projection, no shuffle, no Python.
     """
-    df = env.where(F.col("operation").isin("INSERT", "UPDATE", "DELETE"))
+    where = "operation IN ('INSERT', 'UPDATE', 'DELETE')"
     if table is not None:
-        qualified = F.concat_ws(
-            ".",
-            F.coalesce(F.element_at("tags", "l_db_name"), F.col("db")),
-            F.coalesce(F.element_at("tags", "l_tb_name"), F.col("tbl")),
+        where += (
+            " AND concat_ws('.', coalesce(element_at(tags, 'l_db_name'), db),"
+            f" coalesce(element_at(tags, 'l_tb_name'), tbl)) = {lit(table)}"
         )
-        df = df.where(qualified == F.lit(table))
 
-    img = T.MapType(T.StringType(), T.StringType())
-    pair = T.StructType(
-        [T.StructField("img", img, True), T.StructField("op", T.StringType(), False)]
-    )
+    def pair(img: str, op: str) -> str:
+        return f"struct({img} AS img, {lit(op)} AS op)"
+
+    # the cast pins the element type (op declared NOT NULL inside the
+    # struct), as the reference's RowKind is never null
     changelog = (
-        F.when(
-            F.col("operation") == "INSERT",
-            F.array(F.struct(F.col("after").alias("img"), F.lit(OP_INSERT).alias("op"))),
-        )
-        .when(
-            F.col("operation") == "DELETE",
-            F.array(F.struct(F.col("before").alias("img"), F.lit(OP_DELETE).alias("op"))),
-        )
-        .otherwise(
-            F.array(
-                F.struct(F.col("before").alias("img"), F.lit(OP_UPDATE_BEFORE).alias("op")),
-                F.struct(F.col("after").alias("img"), F.lit(OP_UPDATE_AFTER).alias("op")),
-            )
-        )
-        .cast(T.ArrayType(pair))
+        f"CAST(CASE WHEN operation = 'INSERT' THEN array({pair('after', OP_INSERT)})"
+        f" WHEN operation = 'DELETE' THEN array({pair('before', OP_DELETE)})"
+        f" ELSE array({pair('before', OP_UPDATE_BEFORE)}, {pair('after', OP_UPDATE_AFTER)})"
+        " END AS array<struct<img: map<string, string>, op: string NOT NULL>>)"
     )
-    df = df.withColumn("_chg", F.explode(changelog))
+    df = env.where(where).selectExpr("*", f"explode({changelog}) AS _chg")
 
     cols = [
-        F.element_at(F.col("_chg.img"), f.name).cast(f.dataType).alias(f.name)
+        f"CAST(element_at(_chg.img, {lit(f.name)}) AS {sql_type(f.dataType)}) AS {ident(f.name)}"
         for f in schema.fields
     ]
-    cols.append(F.col("_chg.op").alias("op"))
+    cols.append("_chg.op AS op")
     if include_metadata:
-        cols = [F.col("ts"), F.col("id").alias("record_id")] + cols
+        cols = ["ts", "id AS record_id"] + cols
     if metadata:
         # PHYSICAL + CONNECTOR METADATA ordering, per the reference's
         # produced-row convention (DtsDynamicSource.listReadableMetadata)
@@ -101,5 +92,5 @@ def project_table(
                 raise ValueError(
                     f"unknown metadata key {key!r}; valid: {sorted(METADATA_KEYS)}"
                 )
-            cols.append(F.col(src).alias(key.replace("-", "_")))
-    return df.select(*cols)
+            cols.append(f"{src} AS {ident(key.replace('-', '_'))}")
+    return df.selectExpr(*cols)

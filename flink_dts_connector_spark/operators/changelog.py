@@ -24,25 +24,31 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from flink_dts_connector_spark.sqltext import ident, sql
+
 #: +1 for rows that add to state, −1 for retractions.
 SIGN = {"I": 1, "UA": 1, "UB": -1, "D": -1}
 
 
+def _sign_sql(op: Column | str) -> str:
+    o = sql(op)
+    return f"CASE WHEN {o} IN ('I', 'UA') THEN 1 WHEN {o} IN ('UB', 'D') THEN -1 ELSE 0 END"
+
+
 def sign_col(op: Column | str = "op") -> Column:
-    op = F.col(op) if isinstance(op, str) else op
-    return (
-        F.when(op.isin("I", "UA"), F.lit(1)).when(op.isin("UB", "D"), F.lit(-1)).otherwise(F.lit(0))
-    )
+    """+1 (I/UA), −1 (UB/D), 0 otherwise — one `F.expr` parse."""
+    return F.expr(_sign_sql(op))
 
 
 def signed_sum(measure: Column, op: Column | str = "op") -> Column:
-    """SUM(measure) over a changelog — retraction-correct."""
+    """SUM(measure) over a changelog — retraction-correct. ``measure`` stays
+    a Column (any expression), so it is composed, not rendered to SQL."""
     return F.sum(measure * sign_col(op))
 
 
 def signed_count(op: Column | str = "op") -> Column:
     """COUNT(*) over a changelog — retraction-correct."""
-    return F.sum(sign_col(op))
+    return F.expr(f"sum({_sign_sql(op)})")
 
 
 def materialize_upsert(
@@ -58,18 +64,21 @@ def materialize_upsert(
     before the shuffle), instead of a window sort which shuffles every
     changelog row and then sorts per key. ``order_cols`` must be a total
     order per key (commit ts + monotonic record id, which the wire format
-    guarantees — `DtsRecord.java:13`).
+    guarantees — `DtsRecord.java:13`). Column names are taken literally
+    and the expressions are built as SQL text (`sqltext.py`).
     """
-    df = changelog.where(F.col("op") != "UB")
+    df = changelog.where("op <> 'UB'")
     payload_cols = [c for c in df.columns if c not in key_cols]
-    order = F.struct(*[F.col(c) for c in order_cols])
-    latest = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), order).alias("_latest")
+    keys = [ident(k) for k in key_cols]
+    payload = ", ".join(ident(c) for c in payload_cols)
+    order = ", ".join(ident(c) for c in order_cols)
+    latest = df.groupBy(*map(F.col, keys)).agg(
+        F.expr(f"max_by(struct({payload}), struct({order})) AS _latest")
     )
-    out = latest.select(
-        *key_cols, *[F.col(f"_latest.{c}").alias(c) for c in payload_cols]
+    out = latest.selectExpr(
+        *keys, *[f"_latest.{ident(c)} AS {ident(c)}" for c in payload_cols]
     )
-    return out.where(F.col("op") != "D").drop("op")
+    return out.where("op <> 'D'").drop("op")
 
 
 def txn_manifest(

@@ -26,24 +26,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+#: Column/name → SQL text for `F.expr` composition. r14 (guide §7.3 —
+#: driver plan-build cost): a higher-order function built through the
+#: Python lambda API costs ~12–17 ms of py4j round trips PER HOF (lambda
+#: variables, body and wrapper are each separate JVM calls), profiled at
+#: 0.24–0.36 s per ANN-query build across the `quantized`/`dot_q`/
+#: `norm_sq_q` call sites. Rendering the operand once and parsing the whole
+#: HOF from one SQL string builds the IDENTICAL expression tree at ~2 round
+#: trips instead of ~25.
+from flink_dts_connector_spark.sqltext import sql as _sql
+
 QUANT_SCALE = 1_000_000
-
-
-def _sql(c: Column | str) -> str:
-    """Render a column (name or Column expression) as SQL text for
-    `F.expr` composition. r14 (guide §7.3 — driver plan-build cost):
-    constructing a higher-order function through the Python lambda API
-    costs ~12–17 ms of py4j round-trips PER HOF (the lambda variables,
-    the function body, and the wrapper are each separate JVM calls);
-    profiled at 0.24–0.36 s per ANN-query build across the `quantized`/
-    `dot_q`/`norm_sq_q` call sites. Rendering the operand once
-    (`expr().sql()`, one round-trip) and parsing the whole HOF from a SQL
-    string (one more) builds the IDENTICAL expression tree — same
-    functions, same casts, same lambda structure — at ~2 round-trips
-    instead of ~25."""
-    if isinstance(c, str):
-        return f"`{c}`"
-    return c._jc.node().sql()
 
 
 def quantized(emb: Column | str, scale: int = QUANT_SCALE) -> Column:

@@ -36,13 +36,16 @@ post-switch reads has no gaps (duplicates allowed, README.md:26-28).
 The broker's "bootstrap address" IS its directory path, so
 `dts_kafka_options` output is consumed byte-identically. Logs are built
 with Spark writes (row_number per partition assigns dense offsets — one
-shuffle at build); readers are executor-parallel pyarrow scans filtered
-to the [start, end) offset range, mirroring a real consumer's fetch.
+shuffle at build). Offset bounds and offsetsForTimes come from each log
+file's parquet footer statistics (a log file is written once), so the
+driver-side calls read no data. Readers are executor-parallel pyarrow reads
+of the files whose offsets meet the [start, end) range, mirroring a real
+consumer's fetch, and hand Spark one Arrow RecordBatch per fetch in the
+Kafka schema — no per-record Python objects.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import re
@@ -288,34 +291,70 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
             os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
         )
 
-    def _offset_bounds(self, p: int) -> tuple[int, int]:
-        """(earliest offset, log-end offset) — log end = max+1, Kafka-style."""
+    def _file_stats(self, p: int) -> list[tuple[str, int, int, int]]:
+        """(file, min offset, max offset, max ts_ms) per non-empty log file
+        of partition ``p``, from the parquet footers: a log file is written
+        once, so its row-group statistics are exact. A file whose footer
+        carries no min/max falls back to scanning its two columns. Neither
+        path imports pandas or ``pyarrow.dataset`` (``pq.read_table`` does),
+        which the stream runner's fresh process would pay on every query."""
         import pyarrow.parquet as pq
 
-        lo, hi = None, None
+        out = []
         for f in self._part_files(p):
-            col = pq.read_table(f, columns=["offset"])["offset"]
-            if len(col) == 0:
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            if md.num_rows == 0:
                 continue
-            import pyarrow.compute as pc
+            idx = {md.schema.column(j).name: j for j in range(md.num_columns)}
+            stats = [
+                (rg.column(idx["offset"]).statistics, rg.column(idx["ts_ms"]).statistics)
+                for rg in map(md.row_group, range(md.num_row_groups))
+                if rg.num_rows
+            ]
+            if all(s is not None and s.has_min_max for pair in stats for s in pair):
+                out.append(
+                    (
+                        f,
+                        min(o.min for o, _ in stats),
+                        max(o.max for o, _ in stats),
+                        max(t.max for _, t in stats),
+                    )
+                )
+            else:
+                import pyarrow.compute as pc  # ~80 ms to import: only here
 
-            fmin, fmax = pc.min(col).as_py(), pc.max(col).as_py()
-            lo = fmin if lo is None else min(lo, fmin)
-            hi = fmax if hi is None else max(hi, fmax)
-        return (0, 0) if lo is None else (lo, hi + 1)
+                t = pf.read(columns=["offset", "ts_ms"])
+                o = pc.min_max(t["offset"]).as_py()
+                out.append((f, o["min"], o["max"], pc.max(t["ts_ms"]).as_py()))
+        return out
+
+    def _offset_bounds(self, p: int) -> tuple[int, int]:
+        """(earliest offset, log-end offset) — log end = max+1, Kafka-style."""
+        stats = self._file_stats(p)
+        if not stats:
+            return (0, 0)
+        return (min(s[1] for s in stats), max(s[2] for s in stats) + 1)
 
     def _offset_for_time(self, p: int, ts_ms: int) -> int | None:
-        """Kafka offsetsForTimes: earliest offset whose timestamp >= ts_ms."""
-        import pyarrow.compute as pc
+        """Kafka offsetsForTimes: earliest offset whose timestamp >= ts_ms.
+        Only files whose footer says they hold such a record are read."""
         import pyarrow.parquet as pq
 
         best = None
-        for f in self._part_files(p):
-            t = pq.read_table(f, columns=["offset", "ts_ms"])
-            mask = pc.greater_equal(t["ts_ms"], ts_ms)
-            sel = t.filter(mask)
-            if sel.num_rows:
-                cand = pc.min(sel["offset"]).as_py()
+        for f, _, _, ts_max in self._file_stats(p):
+            if ts_max < ts_ms:
+                continue
+            t = pq.ParquetFile(f).read(columns=["offset", "ts_ms"])
+            cand = min(
+                (
+                    off
+                    for off, ts in zip(t["offset"].to_pylist(), t["ts_ms"].to_pylist())
+                    if ts >= ts_ms
+                ),
+                default=None,
+            )
+            if cand is not None:
                 best = cand if best is None else min(best, cand)
         return best
 
@@ -406,7 +445,9 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
         for p in self.meta["partitions"]:
             s, e = int(start["offsets"][str(p)]), int(end["offsets"][str(p)])
             if e > s:
-                out.append(_FetchPartition(self._part_files(p), p, s, e, self.topic))
+                # only the log files whose offset range meets [s, e)
+                files = [f for f, lo, hi, _ in self._file_stats(p) if lo < e and hi >= s]
+                out.append(_FetchPartition(files, p, s, e, self.topic))
         # Spark requires >=1 partition; an all-drained batch yields none —
         # return an empty fetch of partition 0 to represent the empty batch
         if not out:
@@ -414,38 +455,48 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
             out.append(_FetchPartition([], p0, 0, 0, self.topic))
         return out
 
-    def read(self, partition: _FetchPartition) -> Iterator[tuple]:
+    def read(self, partition: _FetchPartition) -> Iterator:
+        """One Arrow RecordBatch per fetch, in offset order, shaped exactly
+        as the Kafka schema; PySpark passes RecordBatches through to the
+        JVM without a per-record Python conversion."""
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        rows = []
+        if not partition.files:
+            return
+        parts = []
         for f in partition.files:
-            t = pq.read_table(f, columns=["offset", "ts_ms", "value"])
-            mask = pc.and_(
-                pc.greater_equal(t["offset"], partition.start),
-                pc.less(t["offset"], partition.end),
-            )
-            sel = t.filter(mask)
-            offs = sel["offset"].to_pylist()
-            tss = sel["ts_ms"].to_pylist()
-            vals = sel["value"].to_pylist()
-            for off, ts, val in zip(offs, tss, vals):
-                rows.append(
-                    (
-                        None,  # key
-                        val,
-                        partition.topic,
-                        partition.partition,
-                        off,
-                        dt.datetime.fromtimestamp(ts / 1000.0, dt.timezone.utc).replace(
-                            tzinfo=None
-                        ),
-                        0,  # CreateTime
-                        None,  # headers
+            t = pq.ParquetFile(f).read(columns=["offset", "ts_ms", "value"])
+            off = t["offset"]
+            parts.append(
+                t.filter(
+                    pc.and_(
+                        pc.greater_equal(off, partition.start), pc.less(off, partition.end)
                     )
                 )
-        rows.sort(key=lambda r: r[4])
-        return iter(rows)
+            )
+        t = pa.concat_tables(parts, promote_options="default").sort_by("offset")
+        n = t.num_rows
+        schema = to_arrow_schema(KAFKA_SCHEMA)
+        cols = {
+            "key": pa.nulls(n, schema.field("key").type),
+            "value": t["value"],
+            "topic": pa.repeat(pa.scalar(partition.topic, pa.string()), n),
+            "partition": pa.repeat(pa.scalar(partition.partition, pa.int32()), n),
+            "offset": t["offset"],
+            "timestamp": t["ts_ms"]
+            .cast(pa.timestamp("ms", tz="UTC"))
+            .cast(schema.field("timestamp").type),
+            "timestampType": pa.repeat(pa.scalar(0, pa.int32()), n),  # CreateTime
+            "headers": pa.nulls(n, schema.field("headers").type),
+        }
+        yield from (
+            pa.table([cols[name] for name in schema.names], schema=schema)
+            .combine_chunks()
+            .to_batches()
+        )
 
     def commit(self, end: dict) -> None:
         # Progress lives in the query's checkpoint WAL; additionally, when

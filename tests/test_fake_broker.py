@@ -5,6 +5,8 @@ reference's failover contract — kill mid-stream, DStore cluster switch,
 timestamp re-seek, no gaps with duplicates allowed (README.md:26-28) —
 runs end-to-end through `streaming/failover.py`."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -391,3 +393,155 @@ def test_cdc_decode_rides_the_fake_broker(spark, sf_dir, tmp_path):
     got = {(r["id"], r["operation"]) for r in out}
     assert got == want and len(got) > 0
     assert all(r["kafka_partition"] is not None and r["kafka_offset"] is not None for r in out)
+
+
+# -- footer-stat offsets and the Arrow fetch --------------------------------
+
+
+def _multi_file_broker(spark, tmp_path):
+    """A broker whose partition 0 holds three log files: Spark's own, one of
+    two row groups, and one written without column statistics. Timestamps
+    carry millisecond fractions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    register_fake_broker(spark)
+    d = str(tmp_path / "brokerM")
+    rows = [(f"rec-{i}".encode(), i % 2, BASE_MS + i * 1000 + (37 * i) % 1000) for i in range(12)]
+    create_broker(
+        spark, spark.createDataFrame(rows, "value binary, partition int, ts_ms long"),
+        d, "dstore-cluster-M", TOPIC, users=USERS, offset_base=100,
+    )
+    p0 = tmp_path / "brokerM" / "log" / "partition=0"
+
+    def extra(name, first, n, **kw):
+        pq.write_table(
+            pa.table(
+                {
+                    "value": pa.array([f"x-{first + j}".encode() for j in range(n)], pa.binary()),
+                    "ts_ms": pa.array([BASE_MS + 50_000 + (first + j) * 1001 for j in range(n)], pa.int64()),
+                    "offset": pa.array(list(range(first, first + n)), pa.int64()),
+                }
+            ),
+            str(p0 / name),
+            **kw,
+        )
+
+    extra("part-x1.parquet", 106, 6, row_group_size=3)
+    extra("part-x2.parquet", 112, 4, write_statistics=False)
+    return d
+
+
+def _reader(broker_dir, **kw):
+    from flink_dts_connector_spark.sources.fakebroker import _FakeKafkaStreamReader
+
+    return _FakeKafkaStreamReader(
+        dts_kafka_options(broker_dir, TOPIC, "SID42", None, "alice", "s3cret", **kw)
+    )
+
+
+def test_footer_offset_bounds_equal_column_scan(spark, tmp_path):
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    d = _multi_file_broker(spark, tmp_path)
+    r = _reader(d)
+    assert len(r._part_files(0)) >= 3
+    stats = r._file_stats(0)
+    for f, lo, hi, ts_max in stats:
+        t = pq.read_table(f)
+        assert (lo, hi, ts_max) == (
+            pc.min(t["offset"]).as_py(), pc.max(t["offset"]).as_py(), pc.max(t["ts_ms"]).as_py()
+        )
+    for p in (0, 1):
+        offs = [o for f in r._part_files(p) for o in pq.read_table(f)["offset"].to_pylist()]
+        assert r._offset_bounds(p) == (min(offs), max(offs) + 1)
+    assert r._offset_bounds(0) == (100, 116)
+    # offsetsForTimes over the same files: first offset with ts >= target
+    recs = [
+        rec
+        for f in r._part_files(0)
+        for rec in zip(*(pq.read_table(f)[c].to_pylist() for c in ("offset", "ts_ms")))
+    ]
+    for target in (0, BASE_MS + 4_500, BASE_MS + 50_000 + 110 * 1001, BASE_MS + 50_000 + 113 * 1001 + 1):
+        want = min((o for o, ts in recs if ts >= target), default=None)
+        assert r._offset_for_time(0, target) == want
+    assert r._offset_for_time(0, BASE_MS + 10**9) is None
+    # a fetch carries only the files whose offset range meets it
+    (fetch,) = r.partitions({"offsets": {"0": 112, "1": 0}}, {"offsets": {"0": 114, "1": 0}})
+    assert [os.path.basename(f) for f in fetch.files] == ["part-x2.parquet"]
+
+
+def test_read_yields_one_kafka_shaped_arrow_batch(spark, tmp_path):
+    """`read()` gives the rows the old per-record tuple path gave: offset
+    order, exact millisecond timestamps, topic, partition, CreateTime and
+    null key/headers — as one RecordBatch in the Kafka source's schema."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from flink_dts_connector_spark.sources.fakebroker import KAFKA_SCHEMA
+
+    d = _multi_file_broker(spark, tmp_path)
+    r = _reader(d)
+    start, end = 101, 114
+    (fetch,) = r.partitions({"offsets": {"0": start, "1": 0}}, {"offsets": {"0": end, "1": 0}})
+    batches = list(r.read(fetch))
+    assert len(batches) == 1 and batches[0].schema == to_arrow_schema(KAFKA_SCHEMA)
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    want = [
+        {
+            "key": None, "value": v, "topic": TOPIC, "partition": 0, "offset": o,
+            "timestamp": epoch + dt.timedelta(milliseconds=ts), "timestampType": 0,
+            "headers": None,
+        }
+        for f in r._part_files(0)
+        for v, ts, o in zip(*(pq.read_table(f)[c].to_pylist() for c in ("value", "ts_ms", "offset")))
+        if start <= o < end
+    ]
+    want.sort(key=lambda row: row["offset"])
+    assert batches[0].to_pylist() == want
+    assert len(want) == end - start
+    # an all-drained batch reads nothing
+    (empty,) = r.partitions({"offsets": {"0": end, "1": 0}}, {"offsets": {"0": end, "1": 0}})
+    assert list(r.read(empty)) == []
+
+    # through Spark: the same exact timestamps, naive UTC
+    rows = _drain(spark, _raw_stream(spark, d), str(tmp_path / "ckm"))
+    got = {(r["partition"], r["offset"]): r["timestamp"] for r in rows}
+    for row in want:
+        assert got[(0, row["offset"])] == row["timestamp"].replace(tzinfo=None)
+    assert len(rows) == 12 + 6 + 4
+
+
+def test_offsets_import_neither_pandas_nor_dataset(spark, tmp_path):
+    """initialOffset/latestOffset (and the timestamp re-seek) run in the
+    stream runner's fresh process on every query start; they read parquet
+    footers only and must not pull in pandas or `pyarrow.dataset`."""
+    import json
+    import subprocess
+    import sys
+
+    d = _multi_file_broker(spark, tmp_path)
+    opts = [
+        dts_kafka_options(d, TOPIC, "SID42", None, "alice", "s3cret", checkpoint_ts=ts)
+        for ts in (None, (BASE_MS + 4_500) // 1000)
+    ]
+    # the runner unpickles the data source, so it imports this module only
+    code = f"""
+import json, sys
+sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+from flink_dts_connector_spark.sources.fakebroker import _FakeKafkaStreamReader
+out = []
+for opts in json.loads({json.dumps(opts)!r}):
+    r = _FakeKafkaStreamReader(opts)
+    out.append([r.initialOffset(), r.latestOffset()])
+print(json.dumps([out, sorted(m for m in ("pandas", "pyarrow.dataset") if m in sys.modules)]))
+"""
+    res = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, timeout=120)
+    assert res.returncode == 0, res.stderr
+    (earliest, seek), imported = json.loads(res.stdout.strip().splitlines()[-1])
+    assert imported == []
+    assert earliest == [{"offsets": {"0": 100, "1": 100}}, {"offsets": {"0": 116, "1": 106}}]
+    assert seek[0] == {"offsets": {"0": 102, "1": 102}}
