@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from flink_dts_connector_spark.datamodel.envelope import ENVELOPE_SCHEMA
 
@@ -55,6 +56,34 @@ def envelope_checksum(env: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["chk"] or 0)
 
 
+def _store_writer(env: DataFrame, store: str) -> DataStreamWriter:
+    """The store's streaming sink: the envelope as parquet under ``store``,
+    partitioned by ``(tbl_part, ingest_month)``.
+
+    Partition on a DERIVED null-safe key, not tbl itself: the Hive layout
+    collapses null and '' to the default partition (heartbeats carry
+    tbl='' — round-tripping them through a tbl partition column would
+    corrupt the envelope). tbl stays a data column, fidelity intact;
+    pruning happens on tbl_part.
+
+    Time granularity is sized to the data's span ÷ volume: the fixture
+    replays 7 YEARS of commit timestamps at toy volume, so day partitions
+    would mean ~2500 directories × one file per input partition — a
+    small-files explosion that makes every downstream listing slower than
+    the decode it saves. Month granularity + repartition on the partition
+    keys (one file per directory per micro-batch) keeps the file count =
+    tables × months. A production deployment ingesting a day per day flips
+    this to daily partitions + per-table compaction, same code shape."""
+    return (
+        env.withColumn("tbl_part", F.coalesce(F.nullif("tbl", F.lit("")), F.lit(NO_TABLE)))
+        .withColumn("ingest_month", F.date_format("ts", "yyyy-MM"))
+        .repartition("tbl_part", "ingest_month")
+        .writeStream.format("parquet")
+        .option("path", store)
+        .partitionBy("tbl_part", "ingest_month")
+    )
+
+
 def ingest_once(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the decode-once envelope store for ``sf_dir``.
 
@@ -75,6 +104,7 @@ def ingest_once(spark: SparkSession, sf_dir: str) -> str:
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
     from flink_dts_connector_spark.streaming.runner import (
         pinned_shuffle_partitions,
+        run_available_now,
         scratch_dir,
     )
 
@@ -85,37 +115,10 @@ def ingest_once(spark: SparkSession, sf_dir: str) -> str:
         spark.sparkContext.defaultParallelism
     ).write.mode("overwrite").parquet(raw_dir)
     store = scratch_dir("fdcs_envstore_")
-    ckpt = scratch_dir("fdcs_ingest_ckpt_")
     register_dts_source(spark)
     with pinned_shuffle_partitions(spark):
         env = spark.readStream.format("dts").option("path", raw_dir).load()
-        # Partition on a DERIVED null-safe key, not tbl itself: the Hive
-        # layout collapses null and '' to the default partition (heartbeats
-        # carry tbl='' — round-tripping them through a tbl partition column
-        # would corrupt the envelope). tbl stays a data column, fidelity
-        # intact; pruning happens on tbl_part.
-        #
-        # Time granularity is sized to the data's span ÷ volume: the fixture
-        # replays 7 YEARS of commit timestamps at toy volume, so day
-        # partitions would mean ~2500 directories × one file per input
-        # partition — a small-files explosion that makes every downstream
-        # listing slower than the decode it saves. Month granularity +
-        # repartition on the partition keys (one file per directory per
-        # micro-batch) keeps the file count = tables × months. A production
-        # deployment ingesting a day per day flips this to daily partitions
-        # + per-table compaction, same code shape.
-        q = (
-            env.withColumn("tbl_part", F.coalesce(F.nullif("tbl", F.lit("")), F.lit(NO_TABLE)))
-            .withColumn("ingest_month", F.date_format("ts", "yyyy-MM"))
-            .repartition("tbl_part", "ingest_month")
-            .writeStream.format("parquet")
-            .option("path", store)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("tbl_part", "ingest_month")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(_store_writer(env, store))
 
     # audit: stored ≡ re-decoded (full-envelope multiset checksum). Paid once
     # per session — downstream consumers then trust the store.
@@ -219,6 +222,7 @@ def ingest_filtered(
     from flink_dts_connector_spark.formats.jvmheader import prefilter
     from flink_dts_connector_spark.streaming.runner import (
         pinned_shuffle_partitions,
+        run_available_now,
         scratch_dir,
     )
 
@@ -238,27 +242,13 @@ def ingest_filtered(
     if cached is not None and not force:
         return cached
     store = scratch_dir("fdcs_filtstore_")
-    ckpt = scratch_dir("fdcs_filtingest_ckpt_")
     with pinned_shuffle_partitions(spark):
         raw = spark.readStream.schema(
             "value binary, partition int, offset long"
         ).parquet(staged)
         pre = prefilter(raw, tables=tables, ops=ops)
         env = decode_cdc(pre, tables=tables, ops=ops)
-        q = (
-            env.withColumn(
-                "tbl_part", F.coalesce(F.nullif("tbl", F.lit("")), F.lit(NO_TABLE))
-            )
-            .withColumn("ingest_month", F.date_format("ts", "yyyy-MM"))
-            .repartition("tbl_part", "ingest_month")
-            .writeStream.format("parquet")
-            .option("path", store)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("tbl_part", "ingest_month")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(_store_writer(env, store))
 
     stored = spark.read.parquet(store).select(
         *[f.name for f in ENVELOPE_SCHEMA.fields]
@@ -289,6 +279,7 @@ def ingest_incremental(spark: SparkSession, sf_dir: str) -> tuple[str, int, int,
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
     from flink_dts_connector_spark.streaming.runner import (
         pinned_shuffle_partitions,
+        run_available_now,
         scratch_dir,
     )
 
@@ -301,20 +292,7 @@ def ingest_incremental(spark: SparkSession, sf_dir: str) -> tuple[str, int, int,
     def run_wave() -> None:
         with pinned_shuffle_partitions(spark):
             env = spark.readStream.format("dts").option("path", raw_dir).load()
-            q = (
-                env.withColumn(
-                    "tbl_part", F.coalesce(F.nullif("tbl", F.lit("")), F.lit(NO_TABLE))
-                )
-                .withColumn("ingest_month", F.date_format("ts", "yyyy-MM"))
-                .repartition("tbl_part", "ingest_month")
-                .writeStream.format("parquet")
-                .option("path", store)
-                .option("checkpointLocation", ckpt)
-                .partitionBy("tbl_part", "ingest_month")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_available_now(_store_writer(env, store), checkpoint=ckpt)
 
     par = spark.sparkContext.defaultParallelism
     raw.where(F.col("offset") % 2 == 0).repartition(par).write.mode("append").parquet(raw_dir)

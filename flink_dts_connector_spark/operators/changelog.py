@@ -30,23 +30,23 @@ from flink_dts_connector_spark.sqltext import ident, sql
 SIGN = {"I": 1, "UA": 1, "UB": -1, "D": -1}
 
 
-def _sign_sql(op: Column | str) -> str:
+def _sign_sql(op: str) -> str:
     o = sql(op)
     return f"CASE WHEN {o} IN ('I', 'UA') THEN 1 WHEN {o} IN ('UB', 'D') THEN -1 ELSE 0 END"
 
 
-def sign_col(op: Column | str = "op") -> Column:
+def sign_col(op: str = "op") -> Column:
     """+1 (I/UA), −1 (UB/D), 0 otherwise — one `F.expr` parse."""
     return F.expr(_sign_sql(op))
 
 
-def signed_sum(measure: Column, op: Column | str = "op") -> Column:
+def signed_sum(measure: Column, op: str = "op") -> Column:
     """SUM(measure) over a changelog — retraction-correct. ``measure`` stays
     a Column (any expression), so it is composed, not rendered to SQL."""
     return F.sum(measure * sign_col(op))
 
 
-def signed_count(op: Column | str = "op") -> Column:
+def signed_count(op: str = "op") -> Column:
     """COUNT(*) over a changelog — retraction-correct."""
     return F.expr(f"sum({_sign_sql(op)})")
 

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-#: Column/name → SQL text for `F.expr` composition. r14 (guide §7.3 —
+#: column name → SQL text for `F.expr` composition. r14 (guide §7.3 —
 #: driver plan-build cost): a higher-order function built through the
 #: Python lambda API costs ~12–17 ms of py4j round trips PER HOF (lambda
 #: variables, body and wrapper are each separate JVM calls), profiled at
@@ -39,14 +39,14 @@ from flink_dts_connector_spark.sqltext import sql as _sql
 QUANT_SCALE = 1_000_000
 
 
-def quantized(emb: Column | str, scale: int = QUANT_SCALE) -> Column:
+def quantized(emb: str, scale: int = QUANT_SCALE) -> Column:
     """array<float> → array<long> micro-units (exact, engine-identical)."""
     return F.expr(
         f"transform({_sql(emb)}, x -> CAST(round(CAST(x AS DOUBLE) * {int(scale)}) AS BIGINT))"
     )
 
 
-def dot_q(a: Column | str, b: Column | str) -> Column:
+def dot_q(a: str, b: str) -> Column:
     """Exact int64 dot product of two quantized vectors."""
     return F.expr(
         f"aggregate(zip_with({_sql(a)}, {_sql(b)}, (x, y) -> x * y),"
@@ -54,7 +54,7 @@ def dot_q(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def norm_sq_q(a: Column | str) -> Column:
+def norm_sq_q(a: str) -> Column:
     return dot_q(a, a)
 
 
@@ -92,18 +92,18 @@ def brute_force_topk(
     q = queries.select(
         F.col(query_id_col),
         quantized(emb_col).alias("_qe"),
-    ).withColumn("_qn", norm_sq_q(F.col("_qe")))
+    ).withColumn("_qn", norm_sq_q("_qe"))
     it = _spread_by(items.select(F.col(id_col), F.col(emb_col)), id_col).select(
         F.col(id_col),
         quantized(emb_col).alias("_ie"),
-    ).withColumn("_in", norm_sq_q(F.col("_ie")))
+    ).withColumn("_in", norm_sq_q("_ie"))
     scored = (
         it.crossJoin(F.broadcast(q))
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe"), F.col("_ie")), F.col("_qn"), F.col("_in")).alias(
+            cosine_q(dot_q("_qe", "_ie"), F.col("_qn"), F.col("_in")).alias(
                 "score"
             ),
         )
@@ -150,7 +150,7 @@ def lsh_topk(
             quantized(emb_col).alias("_qe"),
             signbit_bucket(emb_col).alias("_bucket"),
         )
-        .withColumn("_qn", norm_sq_q(F.col("_qe")))
+        .withColumn("_qn", norm_sq_q("_qe"))
     )
     it = (
         _spread_by(items.select(F.col(id_col), F.col(emb_col)), id_col)
@@ -159,7 +159,7 @@ def lsh_topk(
             quantized(emb_col).alias("_ie"),
             signbit_bucket(emb_col).alias("_bucket"),
         )
-        .withColumn("_in", norm_sq_q(F.col("_ie")))
+        .withColumn("_in", norm_sq_q("_ie"))
     )
     scored = (
         it.join(F.broadcast(q), "_bucket")
@@ -167,7 +167,7 @@ def lsh_topk(
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe"), F.col("_ie")), F.col("_qn"), F.col("_in")).alias(
+            cosine_q(dot_q("_qe", "_ie"), F.col("_qn"), F.col("_in")).alias(
                 "score"
             ),
         )
@@ -206,7 +206,7 @@ def lsh_multiprobe_topk(
             quantized(emb_col).alias("_qe"),
             signbit_bucket(emb_col).alias("_qb"),
         )
-        .withColumn("_qn", norm_sq_q(F.col("_qe")))
+        .withColumn("_qn", norm_sq_q("_qe"))
         .withColumn(
             "_bucket",
             F.explode(
@@ -224,7 +224,7 @@ def lsh_multiprobe_topk(
             quantized(emb_col).alias("_ie"),
             signbit_bucket(emb_col).alias("_bucket"),
         )
-        .withColumn("_in", norm_sq_q(F.col("_ie")))
+        .withColumn("_in", norm_sq_q("_ie"))
     )
     scored = (
         it.join(F.broadcast(q), "_bucket")
@@ -232,7 +232,7 @@ def lsh_multiprobe_topk(
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe"), F.col("_ie")), F.col("_qn"), F.col("_in")).alias(
+            cosine_q(dot_q("_qe", "_ie"), F.col("_qn"), F.col("_in")).alias(
                 "score"
             ),
         )
@@ -528,13 +528,13 @@ def cosine_pairs_delta(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("n_id"),
         quantized(emb_col).alias("_ne"),
-    ).withColumn("_nn", norm_sq_q(F.col("_ne")))
+    ).withColumn("_nn", norm_sq_q("_ne"))
     o = old.select(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("o_id"),
         quantized(emb_col).alias("_oe"),
-    ).withColumn("_on", norm_sq_q(F.col("_oe")))
-    score = cosine_q(dot_q(F.col("_ne"), F.col("_oe")), F.col("_nn"), F.col("_on"))
+    ).withColumn("_on", norm_sq_q("_oe"))
+    score = cosine_q(dot_q("_ne", "_oe"), F.col("_nn"), F.col("_on"))
     # Defensive n_id != o_id: the documented contract is "old excludes new",
     # but a violated contract must not silently produce a self-pair
     # (least/greatest would yield a_id == b_id at score 1, whose loser rule
@@ -656,7 +656,7 @@ def pq_topk(
         query_id_col, n_sub, "xq",
     )
     lut = q_sub.join(F.broadcast(cb), "sub").select(
-        query_id_col, "sub", "code", dot_q(F.col("xq"), F.col("cq")).alias("_dot")
+        query_id_col, "sub", "code", dot_q("xq", "cq").alias("_dot")
     )
     approx = (
         codes.join(F.broadcast(lut), ["sub", "code"])
@@ -671,10 +671,10 @@ def pq_topk(
         .select(query_id_col, id_col)
     )
     it = items.select(F.col(id_col), quantized(emb_col).alias("_ie")).withColumn(
-        "_in", norm_sq_q(F.col("_ie"))
+        "_in", norm_sq_q("_ie")
     )
     q = queries.select(F.col(query_id_col), quantized(emb_col).alias("_qe2")).withColumn(
-        "_qn", norm_sq_q(F.col("_qe2"))
+        "_qn", norm_sq_q("_qe2")
     )
     rer = (
         cands.join(it, id_col)
@@ -682,7 +682,7 @@ def pq_topk(
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe2"), F.col("_ie")), F.col("_qn"), F.col("_in")).alias(
+            cosine_q(dot_q("_qe2", "_ie"), F.col("_qn"), F.col("_in")).alias(
                 "score"
             ),
         )
@@ -711,15 +711,15 @@ def ivf_assign_cells(
     (score desc, centroid id asc) window ordering."""
     c = centroids.select(
         F.col(centroid_id_col), quantized(emb_col).alias("_ce")
-    ).withColumn("_cn", norm_sq_q(F.col("_ce")))
+    ).withColumn("_cn", norm_sq_q("_ce"))
     it = _spread_by(items.select(F.col(id_col), F.col(emb_col)), id_col).select(
         F.col(id_col), F.col(emb_col), quantized(emb_col).alias("_ie")
-    ).withColumn("_in", norm_sq_q(F.col("_ie")))
+    ).withColumn("_in", norm_sq_q("_ie"))
     scored = it.crossJoin(F.broadcast(c)).select(
         id_col,
         emb_col,
         centroid_id_col,
-        cosine_q(dot_q(F.col("_ie"), F.col("_ce")), F.col("_in"), F.col("_cn")).alias("_s"),
+        cosine_q(dot_q("_ie", "_ce"), F.col("_in"), F.col("_cn")).alias("_s"),
     )
     order = F.struct(
         F.col("_s").alias("s"),
@@ -823,7 +823,7 @@ def kmeans_int_clusters(
     return assign_to_centroids(items, cent, id_col=id_col, emb_col=emb_col, k=k)
 
 
-def _d2_q(vc: Column | str, cc: Column | str) -> Column:
+def _d2_q(vc: str, cc: str) -> Column:
     """Exact int64 squared L2 between two quantized vectors. (Built via
     `F.expr` — see `_sql` for why; identical expression tree.)"""
     return F.expr(
@@ -860,8 +860,6 @@ def kmeans_int_centroids(
         .localCheckpoint()
     )
 
-    d2 = _d2_q
-
     for _ in range(n_iter):
         if k >= ASSIGN_GEMM_MIN_K:
             # SF-aware-k regime: N·k HOF evaluations would make Lloyd's
@@ -873,9 +871,7 @@ def kmeans_int_centroids(
         else:
             assigned = (
                 q.crossJoin(F.broadcast(cent))
-                .select(
-                    F.col(id_col), "v", "cid", d2(F.col("v"), F.col("c")).alias("d2")
-                )
+                .select(F.col(id_col), "v", "cid", _d2_q("v", "c").alias("d2"))
                 .groupBy(id_col)
                 .agg(F.min(F.struct("d2", "cid")).alias("m"), F.first("v").alias("v"))
                 .select(F.col(id_col), F.col("m.cid").alias("cluster"), "v")
@@ -986,7 +982,7 @@ def assign_to_centroids(
         return _assign_gemm(q, centroids, id_col).select(id_col, "cluster", "dist2")
     return (
         q.crossJoin(F.broadcast(centroids))
-        .select(F.col(id_col), "cid", _d2_q(F.col("v"), F.col("c")).alias("d2"))
+        .select(F.col(id_col), "cid", _d2_q("v", "c").alias("d2"))
         .groupBy(id_col)
         .agg(F.min(F.struct("d2", "cid")).alias("m"))
         .select(
@@ -1058,17 +1054,17 @@ def ivf_probe_index(
     `ivf_topk`, split out so incremental maintenance can reuse it)."""
     c = centroids.select(
         F.col(centroid_id_col), quantized(emb_col).alias("_ce")
-    ).withColumn("_cn", norm_sq_q(F.col("_ce")))
+    ).withColumn("_cn", norm_sq_q("_ce"))
     q = queries.select(
         F.col(query_id_col), F.col(emb_col).alias("_qemb"), quantized(emb_col).alias("_qe")
-    ).withColumn("_qn", norm_sq_q(F.col("_qe")))
+    ).withColumn("_qn", norm_sq_q("_qe"))
     probe_scored = q.crossJoin(F.broadcast(c)).select(
         query_id_col,
         "_qemb",
         "_qe",
         "_qn",
         centroid_id_col,
-        cosine_q(dot_q(F.col("_qe"), F.col("_ce")), F.col("_qn"), F.col("_cn")).alias("_s"),
+        cosine_q(dot_q("_qe", "_ce"), F.col("_qn"), F.col("_cn")).alias("_s"),
     )
     wq = W.partitionBy(query_id_col).orderBy(F.desc("_s"), F.asc(centroid_id_col))
     probes = (
@@ -1078,14 +1074,14 @@ def ivf_probe_index(
     )
     it = cells.select(
         F.col(id_col), F.col("cell"), quantized(emb_col).alias("_ie")
-    ).withColumn("_in", norm_sq_q(F.col("_ie")))
+    ).withColumn("_in", norm_sq_q("_ie"))
     scored = (
         it.join(F.broadcast(probes), "cell")
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe"), F.col("_ie")), F.col("_qn"), F.col("_in")).alias("score"),
+            cosine_q(dot_q("_qe", "_ie"), F.col("_qn"), F.col("_in")).alias("score"),
         )
     )
     w = W.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
@@ -1191,14 +1187,14 @@ def ivfpq_topk(
 
     c = centroids.select(
         F.col(centroid_id_col), quantized(emb_col).alias("_ce")
-    ).withColumn("_cn", norm_sq_q(F.col("_ce")))
+    ).withColumn("_cn", norm_sq_q("_ce"))
     q = queries.select(F.col(query_id_col), quantized(emb_col).alias("_qe")).withColumn(
-        "_qn", norm_sq_q(F.col("_qe"))
+        "_qn", norm_sq_q("_qe")
     )
     probe_scored = q.crossJoin(F.broadcast(c)).select(
         query_id_col,
         centroid_id_col,
-        cosine_q(dot_q(F.col("_qe"), F.col("_ce")), F.col("_qn"), F.col("_cn")).alias("_s"),
+        cosine_q(dot_q("_qe", "_ce"), F.col("_qn"), F.col("_cn")).alias("_s"),
     )
     wq = W.partitionBy(query_id_col).orderBy(F.desc("_s"), F.asc(centroid_id_col))
     probes = (
@@ -1212,7 +1208,7 @@ def ivfpq_topk(
         query_id_col, n_sub, "xq",
     )
     lut = q_sub.join(F.broadcast(cb), "sub").select(
-        query_id_col, "sub", "code", dot_q(F.col("xq"), F.col("cq")).alias("_dot")
+        query_id_col, "sub", "code", dot_q("xq", "cq").alias("_dot")
     )
     coded = codes.join(cells.select(id_col, "cell"), id_col)
     approx = (
@@ -1230,10 +1226,10 @@ def ivfpq_topk(
     )
 
     it = items.select(F.col(id_col), quantized(emb_col).alias("_ie")).withColumn(
-        "_in", norm_sq_q(F.col("_ie"))
+        "_in", norm_sq_q("_ie")
     )
     q2 = queries.select(F.col(query_id_col), quantized(emb_col).alias("_qe2")).withColumn(
-        "_qn2", norm_sq_q(F.col("_qe2"))
+        "_qn2", norm_sq_q("_qe2")
     )
     rer = (
         cands.join(it, id_col)
@@ -1241,7 +1237,7 @@ def ivfpq_topk(
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe2"), F.col("_ie")), F.col("_qn2"), F.col("_in")).alias(
+            cosine_q(dot_q("_qe2", "_ie"), F.col("_qn2"), F.col("_in")).alias(
                 "score"
             ),
         )
@@ -1319,18 +1315,18 @@ def sq8_topk(
                 "(c, g) -> (c * g * 2 + 255) div 510), mn, (t, m) -> m + t)"
             ).alias("_re"),
         )
-        .withColumn("_rn", norm_sq_q(F.col("_re")))
+        .withColumn("_rn", norm_sq_q("_re"))
     )
     q = queries.select(
         F.col(query_id_col), quantized(emb_col).alias("_qe")
-    ).withColumn("_qn", norm_sq_q(F.col("_qe")))
+    ).withColumn("_qn", norm_sq_q("_qe"))
     scored = (
         it.crossJoin(F.broadcast(q))
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe"), F.col("_re")), F.col("_qn"), F.col("_rn")).alias(
+            cosine_q(dot_q("_qe", "_re"), F.col("_qn"), F.col("_rn")).alias(
                 "_s8"
             ),
         )
@@ -1342,14 +1338,14 @@ def sq8_topk(
     # exact re-rank of the candidate pool (full-precision both sides)
     exact = items.select(
         F.col(id_col), quantized(emb_col).alias("_xe")
-    ).withColumn("_xn", norm_sq_q(F.col("_xe")))
+    ).withColumn("_xn", norm_sq_q("_xe"))
     rer = (
         cand.join(exact, id_col)
         .join(F.broadcast(q), query_id_col)
         .select(
             query_id_col,
             id_col,
-            cosine_q(dot_q(F.col("_qe"), F.col("_xe")), F.col("_qn"), F.col("_xn")).alias(
+            cosine_q(dot_q("_qe", "_xe"), F.col("_qn"), F.col("_xn")).alias(
                 "score"
             ),
         )

@@ -6759,17 +6759,17 @@ def ann_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("_ql"),
         quantized("embedding").alias("_qe"),
-    ).withColumn("_qn", norm_sq_q(F.col("_qe")))
+    ).withColumn("_qn", norm_sq_q("_qe"))
     it = e.select(
         "vec_id", F.col("label").alias("_il"), quantized("embedding").alias("_ie")
-    ).withColumn("_in", norm_sq_q(F.col("_ie")))
+    ).withColumn("_in", norm_sq_q("_ie"))
     scored = (
         it.join(F.broadcast(q), F.col("_il") == F.col("_ql"))
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             "vec_id",
-            cosine_q(dot_q(F.col("_qe"), F.col("_ie")), F.col("_qn"), F.col("_in")).alias(
+            cosine_q(dot_q("_qe", "_ie"), F.col("_qn"), F.col("_in")).alias(
                 "score"
             ),
         )

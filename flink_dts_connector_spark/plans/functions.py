@@ -221,7 +221,7 @@ def proj_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_dts_connector_spark.operators.similarity import quantized
 
     emb = F.col("embedding")
-    q = quantized(emb)
+    q = quantized("embedding")
     return t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.size(emb).cast("bigint").alias("dim"),
@@ -297,7 +297,7 @@ def proj_posexplode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") % 100 == 0)
-        .select("vec_id", F.posexplode(quantized(F.col("embedding"))).alias("pos", "q"))
+        .select("vec_id", F.posexplode(quantized("embedding")).alias("pos", "q"))
     )
 
 

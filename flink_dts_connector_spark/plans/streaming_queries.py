@@ -29,6 +29,7 @@ from flink_dts_connector_spark.streaming.runner import (
     pinned_shuffle_partitions,
     read_stream_table,
     read_waves,
+    run_available_now,
     run_to_memory,
     write_waves,
     scratch_dir,
@@ -36,6 +37,17 @@ from flink_dts_connector_spark.streaming.runner import (
 
 # append-mode emission cutoff: windows with end <= max(ts) - 10 min
 SQL_WM_CUTOFF = "(SELECT max(ts) - INTERVAL 10 MINUTE FROM events)"
+
+
+def _require_batches(progress: list) -> None:
+    """The incremental folds below prove that batch-by-batch merging
+    converges to the batch closed form; a stream that ran as ONE
+    micro-batch would pass the oracle without exercising the merge."""
+    if len(progress) < 2:
+        raise AssertionError(
+            f"expected multiple micro-batches, got {len(progress)} — the "
+            f"incremental merge was not actually exercised"
+        )
 
 
 @register(
@@ -927,17 +939,14 @@ def stream_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta.where(F.col("wave") == wave).drop("wave").repartition(2).write.mode(
                 "append"
             ).parquet(raw_dir)
-            q = (
+            run_available_now(
                 spark.readStream.format("dts")
                 .option("path", raw_dir)
                 .option("tables", "corpus.documents")
                 .load()
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .writeStream.foreachBatch(apply_batch),
+                checkpoint=ckpt,
             )
-            q.awaitTermination()
 
     return C.shard_assign(state["kept"], n_shards=16).groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1042,16 +1051,13 @@ def stream_txn_atomic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             waved.where(F.col("wave") == wave).drop("wave").repartition(2).write.mode(
                 "append"
             ).parquet(raw_dir)
-            q = (
+            run_available_now(
                 spark.readStream.format("dts")
                 .option("path", raw_dir)
                 .load()
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .writeStream.foreachBatch(apply_batch),
+                checkpoint=ckpt,
             )
-            q.awaitTermination()
 
     applied = state["applied"]
     return applied.groupBy("tbl").agg(
@@ -1331,17 +1337,14 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "orders")):
         for cond in waves:
             raw.where(cond).repartition(2).write.mode("append").parquet(raw_dir)
-            q = (
+            run_available_now(
                 spark.readStream.format("dts")
                 .option("path", raw_dir)
                 .option("tables", f"{DB}.{TBL}")
                 .load()
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .writeStream.foreachBatch(apply_batch),
+                checkpoint=ckpt,
             )
-            q.awaitTermination()
     return state["hist"].select(*out_cols)
 
 
@@ -1387,7 +1390,7 @@ def stream_profile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = spark.createDataFrame(
         [], "user_id bigint, event_type string, value double, ts timestamp, event_id bigint"
     )
-    state = {"prof": empty.localCheckpoint(), "batches": 0}
+    state = {"prof": empty.localCheckpoint()}
     pick = F.max_by(
         F.struct("value", "ts", "event_id"), F.struct("ts", "event_id")
     ).alias("w")
@@ -1405,22 +1408,11 @@ def stream_profile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "event_type", "w.value", "w.ts", "w.event_id")
         )
         state["prof"] = merged.localCheckpoint()
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "events")):
         stream = read_waves(spark, empty.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_prof_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if state["batches"] < 2:
-        raise AssertionError(
-            f"expected multiple micro-batches, got {state['batches']} — the "
-            f"incremental merge was not actually exercised"
-        )
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
+    _require_batches(progress)
 
     types = ["click", "error", "purchase", "signup", "view"]
     return state["prof"].groupBy("user_id").agg(
@@ -1545,7 +1537,7 @@ def stream_kmv_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_waves(ev, F.col("event_id") % 3, waves_dir)
 
     empty = spark.createDataFrame([], "g string, h bigint")
-    state = {"sk": empty.localCheckpoint(), "batches": 0}
+    state = {"sk": empty.localCheckpoint()}
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
         batch_sk = SK.kmv_sketch(bdf, key_col="user_id", group_col="event_type", k=64)
@@ -1560,24 +1552,14 @@ def stream_kmv_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("g", "h")
         )
         state["sk"] = merged.localCheckpoint()
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "events")):
         stream = read_waves(spark, ev.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_kmv_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)  # state is localCheckpoint-ed
-    if state["batches"] < 2:
-        raise AssertionError(
-            f"expected multiple micro-batches, got {state['batches']}"
-        )
+    _require_batches(progress)
 
     from pyspark.sql import Window as W
 
@@ -1653,14 +1635,7 @@ def stream_fixed_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("cents") * s).cast("bigint").alias("sum_cents"),
             F.sum(s).cast("bigint").alias("n_orders"),
         )
-        q = (
-            agg.writeStream.foreachBatch(fold)
-            .outputMode("update")
-            .option("checkpointLocation", scratch_dir("fdcs_fixw_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(agg.writeStream.foreachBatch(fold).outputMode("update"))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)  # state is localCheckpoint-ed
@@ -1801,15 +1776,9 @@ def stream_profiled_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count(F.lit(1)).alias("n"))
             )
             name = f"profwm_{uuid.uuid4().hex[:8]}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", scratch_dir("fdcs_profwm_ckpt_"))
-                .trigger(availableNow=True)
-                .start()
+            progress = run_available_now(
+                agg.writeStream.format("memory").queryName(name).outputMode("update")
             )
-            q.awaitTermination()
             # numRowsDroppedByWatermark counts rows AFTER the map-side
             # partial aggregation (one partial per (window, task)) — at
             # sf0.1 the engine reports 44 partials for 121 dropped INPUT
@@ -1822,7 +1791,7 @@ def stream_profiled_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             # sum-of-max and dropped = total - admitted, exactly.
             dropped_partials = sum(
                 int(op.get("numRowsDroppedByWatermark") or 0)
-                for p in q.recentProgress
+                for p in progress
                 for op in (p.get("stateOperators") or [])
             )
             admitted = (
@@ -1891,27 +1860,19 @@ def stream_hll_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_waves(ev, F.col("event_id") % 3, waves_dir)
 
     empty = spark.createDataFrame([], "g string, j bigint, r bigint")
-    state = {"regs": empty.localCheckpoint(), "batches": 0}
+    state = {"regs": empty.localCheckpoint()}
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
         batch_regs = SK.hll_registers(bdf, key_col="user_id", group_col="event_type")
         state["regs"] = SK.hll_merge(state["regs"], batch_regs).localCheckpoint()
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "events")):
         stream = read_waves(spark, ev.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_hll_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)  # state is localCheckpoint-ed
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
 
     est = SK.hll_estimate(state["regs"])
     exact = (
@@ -1963,7 +1924,7 @@ def stream_store_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = spark.createDataFrame(
         [], "o_orderpriority string, total_open_price decimal(38,2), n_orders bigint"
     )
-    state = {"totals": empty.localCheckpoint(), "batches": 0}
+    state = {"totals": empty.localCheckpoint()}
 
     def fold(bdf: DataFrame, epoch: int) -> None:
         changed = bdf.select("o_orderpriority", "total_open_price", "n_orders")
@@ -1971,7 +1932,6 @@ def stream_store_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             changed.select("o_orderpriority"), "o_orderpriority", "left_anti"
         )
         state["totals"] = kept.unionByName(changed).localCheckpoint()
-        state["batches"] += 1
 
     # derive the trigger size from the store's actual committed file count so
     # at least two micro-batches are guaranteed at ANY fixture scale (the old
@@ -2004,16 +1964,10 @@ def stream_store_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_open_price"),
             F.sum(s).cast("bigint").alias("n_orders"),
         )
-        q = (
-            agg.writeStream.foreachBatch(fold)
-            .outputMode("update")
-            .option("checkpointLocation", scratch_dir("fdcs_storetail_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
+        progress = run_available_now(
+            agg.writeStream.foreachBatch(fold).outputMode("update")
         )
-        q.awaitTermination()
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
     return (
         state["totals"]
         .where(F.col("n_orders") > 0)
@@ -2178,7 +2132,7 @@ def stream_histogram_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_waves(orders, F.col("o_orderkey") % 3, waves_dir)
 
     empty = spark.createDataFrame([], "g string, bucket bigint, c bigint")
-    state = {"cells": empty.localCheckpoint(), "batches": 0}
+    state = {"cells": empty.localCheckpoint()}
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
         batch_cells = SK.value_histogram(
@@ -2191,22 +2145,14 @@ def stream_histogram_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             16,
         )
         state["cells"] = SK.histogram_merge(state["cells"], batch_cells).localCheckpoint()
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "orders")):
         stream = read_waves(spark, orders.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_hq_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)  # state is localCheckpoint-ed
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
     return SK.histogram_quantiles(
         state["cells"], [(1, 2), (9, 10), (99, 100)], 16
     ).select("g", "q_num", "q_den", "est_lo", "est_hi")
@@ -2271,7 +2217,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = spark.createDataFrame(
         [], "event_type string, bucket bigint, c0 bigint, c1 bigint"
     )
-    state = {"cells": empty.localCheckpoint(), "batches": 0}
+    state = {"cells": empty.localCheckpoint()}
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
         batch_cells = drift_tv_cells(bdf)
@@ -2285,22 +2231,14 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "events")):
         stream = read_waves(spark, events.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_drift_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)  # state is localCheckpoint-ed
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
     return drift_tv_report(state["cells"])
 
 
@@ -2335,7 +2273,7 @@ def stream_seasonal_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_waves(events, F.col("event_id") % 3, waves_dir)
 
     empty = spark.createDataFrame([], "day date, n bigint")
-    state = {"cells": empty.localCheckpoint(), "batches": 0}
+    state = {"cells": empty.localCheckpoint()}
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
         state["cells"] = (
@@ -2345,22 +2283,14 @@ def stream_seasonal_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("n").cast("bigint").alias("n"))
             .localCheckpoint()
         )
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "events")):
         stream = read_waves(spark, events.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_seas_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)  # state is localCheckpoint-ed
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
     return seasonal_decompose_report(state["cells"])
 
 
@@ -2436,14 +2366,7 @@ def _failover_phase_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             offsets_by_timestamp=offsets_by_timestamp, source_format="kafka_fake",
         ).select("id", "operation", "kafka_partition", "kafka_offset", "kafka_timestamp")
         with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "orders")):
-            q = (
-                env.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", scratch_dir("fdcs_failover_ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_available_now(env.writeStream.format("parquet").option("path", out))
 
     out1 = scratch_dir("fdcs_failover_p1_")
     run_phase(broker_a, out1, None)
@@ -2603,7 +2526,7 @@ def stream_media_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sample_rate bigint, bitrate_kbps bigint, n_docs bigint, total_frames bigint,"
         " stream_bytes bigint, id3_bytes bigint, payload_sum bigint",
     )
-    state = {"cells": empty.localCheckpoint(), "batches": 0}
+    state = {"cells": empty.localCheckpoint()}
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
         feats = M.decode_mp3_features(M.attach_mp3_media(bdf))
@@ -2627,22 +2550,14 @@ def stream_media_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         state["cells"] = merged.localCheckpoint()
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "documents")):
         stream = read_waves(spark, docs.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_media_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
     return state["cells"].select(
         "sample_rate",
         "bitrate_kbps",
@@ -2728,7 +2643,7 @@ def stream_semdedup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batches the frame lists are compacted into one checkpoint each, so
     # the union lineage stays O(1) deep per compaction window instead of
     # growing with stream lifetime.
-    state = {"rosters": [], "losers": [], "batches": 0}
+    state = {"rosters": [], "losers": []}
     roster_schema = "vec_id bigint, cluster bigint, dist2 bigint, embedding array<float>"
 
     def roster_df() -> DataFrame:
@@ -2784,7 +2699,6 @@ def stream_semdedup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).distinct()
         state["rosters"].append(new)
         state["losers"].append(batch_losers)
-        state["batches"] += 1
         if len(state["rosters"]) >= _STATE_COMPACT_EVERY:
             state["rosters"] = [roster_df().localCheckpoint()]
             lo = state["losers"][0]
@@ -2794,18 +2708,11 @@ def stream_semdedup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "embeddings")):
         stream = read_waves(spark, emb.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_semdd_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
 
     roster = roster_df()
     losers = state["losers"][0]
@@ -2883,7 +2790,6 @@ def stream_labelprop_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "edges": spark.createDataFrame([], "a_id bigint, b_id bigint").localCheckpoint(),
         "comp": spark.createDataFrame([], "u bigint, cid bigint").localCheckpoint(),
         "labels": spark.createDataFrame([], "u bigint, lbl bigint").localCheckpoint(),
-        "batches": 0,
     }
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
@@ -2947,22 +2853,14 @@ def stream_labelprop_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(sub_labels)
             .localCheckpoint()
         )
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "documents")):
         stream = read_waves(spark, pairs.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_lpm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
 
     return (
         state["labels"]
@@ -3037,7 +2935,6 @@ def stream_pagerank_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {
         "edges": spark.createDataFrame([], "a_id bigint, b_id bigint").localCheckpoint(),
         "ranks": spark.createDataFrame([], ranks_schema).localCheckpoint(),
-        "batches": 0,
     }
     TELEPORT = 150_000  # rank of an isolated node after any round >= 1
 
@@ -3125,22 +3022,14 @@ def stream_pagerank_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .drop(f"_n{t}")
             )
         state["ranks"] = spliced.localCheckpoint()
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "documents")):
         stream = read_waves(spark, pairs.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_prm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
 
     connected = state["ranks"].select(
         F.col("u").alias("doc_id"), F.col(f"r{n_rounds}").alias("rank_int")
@@ -3225,14 +3114,7 @@ def _group_resume_phase_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str
             source_format="kafka_fake", extra=extra,
         ).select("id", "operation", "kafka_partition", "kafka_offset")
         with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "orders")):
-            q = (
-                env.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", scratch_dir("fdcs_group_ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_available_now(env.writeStream.format("parquet").option("path", out))
 
     # Phase 1: multiple rate-limited micro-batches (maxRecordsPerTrigger), so
     # commit-on-checkpoint genuinely exercises the broker group store
@@ -3408,7 +3290,6 @@ def stream_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "index": index_empty.localCheckpoint(),
         "sh": sh_empty.localCheckpoint(),
         "pairs": pairs_empty.localCheckpoint(),
-        "batches": 0,
     }
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
@@ -3438,22 +3319,14 @@ def stream_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(D._shingled(new, "doc_id", "text", 3).where(F.size("sh") > 0))
             .localCheckpoint()
         )
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "documents")):
         stream = read_waves(spark, docs.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_mhm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(f"expected multiple micro-batches, got {state['batches']}")
+    _require_batches(progress)
     return state["pairs"]
 
 
@@ -3506,7 +3379,6 @@ def stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {
         "post": post_empty.localCheckpoint(),
         "stats": stats_empty.localCheckpoint(),
-        "batches": 0,
     }
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
@@ -3524,24 +3396,14 @@ def stream_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["stats"] = (
             state["stats"].unionByName(delta_stats).localCheckpoint()
         )
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "documents")):
         stream = read_waves(spark, docs.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_bm25m_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(
-            f"expected multiple micro-batches, got {state['batches']}"
-        )
+    _require_batches(progress)
     merged_stats = state["stats"].agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("sum_dl").cast("bigint").alias("sum_dl"),
@@ -3591,7 +3453,6 @@ def stream_trigram_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {
         "tri": tri_empty.localCheckpoint(),
         "texts": txt_empty.localCheckpoint(),
-        "batches": 0,
     }
 
     def merge(bdf: DataFrame, batch_id: int) -> None:
@@ -3608,24 +3469,14 @@ def stream_trigram_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        state["batches"] += 1
 
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "documents")):
         stream = read_waves(spark, docs.schema, waves_dir)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("fdcs_trgm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        progress = run_available_now(stream.writeStream.foreachBatch(merge))
     import shutil
 
     shutil.rmtree(waves_dir, ignore_errors=True)
-    if state["batches"] < 2:
-        raise AssertionError(
-            f"expected multiple micro-batches, got {state['batches']}"
-        )
+    _require_batches(progress)
     pats = (
         state["texts"]
         .where(

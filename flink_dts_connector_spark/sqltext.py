@@ -9,7 +9,6 @@ any field name (backtick, dot, quote, space) survives the trip into SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import types as T
 
 
@@ -31,12 +30,16 @@ def sql_type(dt: T.DataType) -> str:
     return "timestamp_ltz" if isinstance(dt, T.TimestampType) else dt.simpleString()
 
 
-def sql(c: Column | str) -> str:
-    """A column as SQL text. A name follows ``F.col``: dots navigate struct
-    fields (``"a.b"`` → `` `a`.`b` ``); each part is quoted with `ident`. A
-    Column renders through its node's ``sql()``, which is valid SQL for a
-    plain reference to a name that needs no quoting, not for an operator
-    (``F.col("a") * 2`` renders ``*(a, 2)``) or a name like ``a b``."""
-    if isinstance(c, str):
-        return ".".join(ident(part) for part in c.split("."))
-    return c._jc.node().sql()
+def sql(name: str) -> str:
+    """A column name as SQL text, following ``F.col``: dots navigate struct
+    fields (``"a.b"`` → `` `a`.`b` ``); each part is quoted with `ident`.
+
+    Names only: PySpark has no public way to render a ``Column`` as SQL
+    (its classic-only node ``sql()`` gives ``*(a, 2)`` for
+    ``F.col("a") * 2``), so a Column raises ``TypeError``."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"sqltext.sql takes a column name (str), got {type(name).__name__}; "
+            "pass the column's name, e.g. \"x\" rather than F.col(\"x\")"
+        )
+    return ".".join(ident(part) for part in name.split("."))

@@ -47,6 +47,12 @@ class DtsProgressTracker:
     Used via ``foreachBatch`` (batch path) or a StreamingQueryListener's
     ``onQueryProgress`` (streaming path): call :meth:`update` with the
     batch's max (partition → offset, ts), then :meth:`save`.
+
+    Ordering contract: call :meth:`save` only after every sink step of the
+    batch has succeeded. The saved timestamp is where a re-seek after a
+    DStore cluster switch starts; saved before a sink step that then
+    fails, it already covers the failed batch, and the re-seek by
+    timestamp skips that batch for good.
     """
 
     state_path: str

@@ -15,6 +15,8 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 
 def scratch_dir(prefix: str) -> str:
@@ -178,6 +180,32 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return stream
 
 
+def run_available_now(
+    writer: DataStreamWriter, checkpoint: str | None = None
+) -> list[StreamingQueryProgress]:
+    """Run a bounded stream: start ``writer`` under
+    ``trigger(availableNow=True)``, wait for it to drain everything
+    available at start, and return its ``recentProgress`` — one
+    `StreamingQueryProgress` per micro-batch (batch id, input rows,
+    ``durationMs`` phases, ``stateOperators``), plus any no-data batch a
+    stateful query runs to advance its watermark. Spark keeps the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100).
+
+    The caller sets the sink, ``outputMode`` and ``partitionBy`` on the
+    writer; this sets only the checkpoint and the trigger. ``checkpoint``
+    defaults to a fresh `scratch_dir`; pass a shared one to resume a
+    query across calls (each call then processes only what landed since
+    the last). A failure inside the query (e.g. in a ``foreachBatch``
+    function) propagates as the ``awaitTermination`` exception."""
+    q = (
+        writer.option("checkpointLocation", checkpoint or scratch_dir("fdcs_ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q.recentProgress
+
+
 def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "append",
@@ -193,15 +221,8 @@ def run_to_memory(
     ``rows_per_partition=`` (r14): the density target — interval joins pass
     JOIN_STATE_ROWS_PER_PARTITION."""
     name = f"q_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir("fdcs_ckpt_")
     with pinned_shuffle_partitions(sdf.sparkSession, rows=rows, rows_per_partition=rows_per_partition):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            sdf.writeStream.format("memory").queryName(name).outputMode(output_mode)
         )
-        q.awaitTermination()
     return sdf.sparkSession.table(name)

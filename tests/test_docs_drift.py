@@ -181,3 +181,41 @@ def test_readme_codec_paragraph_matches_codec_inventory():
         assert re.search(codec, para, re.I), f"stub codec {codec!r} undisclosed"
         real_clause = real_part.rsplit(";", 1)[0]
         assert not re.search(codec, real_clause, re.I), f"{codec!r} claimed real"
+
+
+def test_bounded_runs_go_through_run_available_now():
+    """Every bounded streaming run in the package goes through
+    `streaming/runner.py:run_available_now` (one place that sets the
+    trigger and keeps the run's progress), so no other module calls
+    ``.trigger(availableNow=True)`` or ``.awaitTermination(``. Comments and
+    docstrings may mention either. The one exception is the group-resume
+    phase 1, which runs under ``processingTime`` with a drained-count stop
+    because a rate-capped ``availableNow`` run ends after one batch."""
+    import ast
+
+    pkg = os.path.join(REPO, "flink_dts_connector_spark")
+    allowed = {("plans/streaming_queries.py", "_group_resume_phase_dirs")}
+    found = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(root, f), pkg).replace(os.sep, "/")
+            if rel == "streaming/runner.py":
+                continue
+            tree = ast.parse(open(os.path.join(root, f)).read())
+            # (top-level function, node) for every node, so a call inside a
+            # nested closure is charged to the function that defines it
+            owned = [
+                (top.name if isinstance(top, ast.FunctionDef) else "<module>", node)
+                for top in tree.body
+                for node in ast.walk(top)
+            ]
+            for owner, node in owned:
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                attr = node.func.attr
+                bounded = attr == "trigger" and any(k.arg == "availableNow" for k in node.keywords)
+                if (bounded or attr == "awaitTermination") and (rel, owner) not in allowed:
+                    found.append(f"{rel}:{node.lineno} ({owner}) .{attr}(")
+    assert not found, "hand-rolled bounded runs; use run_available_now:\n" + "\n".join(found)

@@ -210,14 +210,14 @@ def test_kmeans_centroids_deterministic_and_better(spark, sf_dir):
 
     def objective(cent):
         c = cent.select("centroid_id", S.quantized("embedding").alias("_ce")).withColumn(
-            "_cn", S.norm_sq_q(F.col("_ce"))
+            "_cn", S.norm_sq_q("_ce")
         )
         it = e.select("vec_id", S.quantized("embedding").alias("_ie")).withColumn(
-            "_in", S.norm_sq_q(F.col("_ie"))
+            "_in", S.norm_sq_q("_ie")
         )
         sc = it.crossJoin(F.broadcast(c)).select(
             "vec_id",
-            S.cosine_q(S.dot_q(F.col("_ie"), F.col("_ce")), F.col("_in"), F.col("_cn")).alias("s"),
+            S.cosine_q(S.dot_q("_ie", "_ce"), F.col("_in"), F.col("_cn")).alias("s"),
         )
         return sc.groupBy("vec_id").agg(F.max("s").alias("b")).agg(F.avg("b")).first()[0]
 
@@ -1434,13 +1434,13 @@ def test_cosine_pairs_tiled_exact(spark):
             F.col(block_col).alias("_blk"),
             F.col("vec_id").alias("a_id"),
             quantized("embedding").alias("_ae"),
-        ).withColumn("_an", norm_sq_q(F.col("_ae")))
+        ).withColumn("_an", norm_sq_q("_ae"))
         b = items.select(
             F.col(block_col).alias("_blk"),
             F.col("vec_id").alias("b_id"),
             quantized("embedding").alias("_be"),
-        ).withColumn("_bn", norm_sq_q(F.col("_be")))
-        score = cosine_q(dot_q(F.col("_ae"), F.col("_be")), F.col("_an"), F.col("_bn"))
+        ).withColumn("_bn", norm_sq_q("_be"))
+        score = cosine_q(dot_q("_ae", "_be"), F.col("_an"), F.col("_bn"))
         return (
             a.join(b, (a["_blk"] == b["_blk"]) & (F.col("a_id") < F.col("b_id")))
             .select("a_id", "b_id", score.alias("score"))

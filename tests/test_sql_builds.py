@@ -178,12 +178,14 @@ def test_changelog_builds_py4j_budget(spark):
     assert 0 < len(calls) <= 250, len(calls)
 
 
-def test_sqltext_quoting():
+def test_sqltext_quoting(spark):
     assert ident("a`b") == "`a``b`"
     assert ident("c.d") == "`c.d`"
     assert lit("it's \\ x") == "'it\\'s \\\\ x'"
     assert _sql("a.b") == "`a`.`b`"
     assert _sql("a`b") == "`a``b`"
+    with pytest.raises(TypeError, match="column name"):
+        _sql(F.col("a") * 2)  # no public Column -> SQL rendering
 
 
 def test_sql_names_navigate_structs_and_quote_backticks(spark):

@@ -16,10 +16,11 @@ Normalization source, in preference order:
   1. queries_normalized (full artifact — min / median-of-adjacent-sentinels)
   2. raw / sentinel_median_sec (compact line / driver wrapper)
 
-Flag rule (same as tools/bench_compare.py): a query is a MOVER only when raw
-AND normalized ratios both exceed the threshold (default 1.4 — the judge's
-attribution bar). One family alone is a sentinel-shift / noise note. Movers
-mean "rerun solo on a quiet box before believing", not "regression".
+Flag rule: a query is a MOVER only when raw AND normalized ratios both
+exceed the threshold (default 1.4, the attribution bar; ``--flag 1.5`` is
+the older min-of-3 threshold this tool's predecessor used). One family
+alone is a sentinel-shift / noise note. Movers mean "rerun solo on a quiet
+box before believing", not "regression".
 
 Usage:
   python tools/bench_diff.py OLD NEW [--flag 1.4] [--json OUT.json]
