@@ -87,8 +87,8 @@ def _store_writer(env: DataFrame, store: str) -> DataStreamWriter:
 def ingest_once(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the decode-once envelope store for ``sf_dir``.
 
-    First call: stage the wire bytes, stream-decode them ONCE with the
-    `dts` source under availableNow, write the envelope as parquet
+    First call: stage the wire bytes, stream-decode them ONCE with
+    `read_stream_files` under availableNow, write the envelope as parquet
     partitioned by ``(tbl_part, ingest_month)``, then AUDIT the store — the
     stored envelope must checksum-equal a fresh batch re-decode of the
     same bytes (decode-once is only admissible if storing loses nothing).
@@ -100,25 +100,24 @@ def ingest_once(spark: SparkSession, sf_dir: str) -> str:
         return cached
 
     from flink_dts_connector_spark.formats.decoder import decode_cdc
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
     from flink_dts_connector_spark.streaming.runner import (
         pinned_shuffle_partitions,
         run_available_now,
         scratch_dir,
     )
 
-    # one raw file per core: the dts source parallelizes by file, and decode
-    # is the ingest bottleneck — stage at full width
+    # one raw file per core: the file source packs files into tasks by
+    # size, so equal files get one task each, and decode is the ingest
+    # bottleneck — stage at full width
     raw_dir = scratch_dir("fdcs_ingest_raw_")
     generate_cdc_bytes(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     ).write.mode("overwrite").parquet(raw_dir)
     store = scratch_dir("fdcs_envstore_")
-    register_dts_source(spark)
     with pinned_shuffle_partitions(spark):
-        env = spark.readStream.format("dts").option("path", raw_dir).load()
-        run_available_now(_store_writer(env, store))
+        run_available_now(_store_writer(read_stream_files(spark, raw_dir), store))
 
     # audit: stored ≡ re-decoded (full-envelope multiset checksum). Paid once
     # per session — downstream consumers then trust the store.
@@ -220,6 +219,7 @@ def ingest_filtered(
     an earlier query in the same session already populated the key."""
     from flink_dts_connector_spark.formats.decoder import decode_cdc
     from flink_dts_connector_spark.formats.jvmheader import prefilter
+    from flink_dts_connector_spark.sources.kafka import RAW_FILE_SCHEMA
     from flink_dts_connector_spark.streaming.runner import (
         pinned_shuffle_partitions,
         run_available_now,
@@ -243,9 +243,7 @@ def ingest_filtered(
         return cached
     store = scratch_dir("fdcs_filtstore_")
     with pinned_shuffle_partitions(spark):
-        raw = spark.readStream.schema(
-            "value binary, partition int, offset long"
-        ).parquet(staged)
+        raw = spark.readStream.schema(RAW_FILE_SCHEMA).parquet(staged)
         pre = prefilter(raw, tables=tables, ops=ops)
         env = decode_cdc(pre, tables=tables, ops=ops)
         run_available_now(_store_writer(env, store))
@@ -266,17 +264,17 @@ def ingest_filtered(
 def ingest_incremental(spark: SparkSession, sf_dir: str) -> tuple[str, int, int, int]:
     """Decode-once store MAINTENANCE: the wire lands in two waves, and the
     SAME checkpointed streaming ingest runs twice — the second run resumes
-    from the checkpoint WAL and decodes ONLY the delta files (exactly-once
-    over the `dts` source's compact offsets), appending to the store.
+    from the checkpoint and decodes ONLY the delta files (exactly-once
+    over the file source's seen-files log), appending to the store.
     Returns ``(store, rows_after_wave0, rows_total, n_wave1_records)`` so
     the caller can assert incrementality: the delta run must add exactly
     the wave-1 records, never re-decode wave 0.
 
     This is the continuous form of `ingest_once`: in production the query
     simply stays running; here availableNow + a shared checkpoint proves
-    the restart/delta contract the WAL provides."""
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
+    the restart/delta contract the checkpoint provides."""
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
     from flink_dts_connector_spark.streaming.runner import (
         pinned_shuffle_partitions,
         run_available_now,
@@ -287,11 +285,10 @@ def ingest_incremental(spark: SparkSession, sf_dir: str) -> tuple[str, int, int,
     raw_dir = scratch_dir("fdcs_incing_raw_")
     store = scratch_dir("fdcs_incing_store_")
     ckpt = scratch_dir("fdcs_incing_ckpt_")
-    register_dts_source(spark)
 
     def run_wave() -> None:
         with pinned_shuffle_partitions(spark):
-            env = spark.readStream.format("dts").option("path", raw_dir).load()
+            env = read_stream_files(spark, raw_dir)
             run_available_now(_store_writer(env, store), checkpoint=ckpt)
 
     par = spark.sparkContext.defaultParallelism

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_dts_connector_spark.operators.text import add_ngrams, fingerprint
+from flink_dts_connector_spark.session import spread
 
 # Mersenne prime 2^31-1 for the affine MinHash permutations: h_i = (a_i·h +
 # b_i) mod P. 31-bit hash space keeps a·h + b well inside int64 (ANSI mode
@@ -785,10 +786,7 @@ def positional_grams(
     downstream shuffles on g regardless."""
     from flink_dts_connector_spark.operators.text import tokens
 
-    narrow = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-    target = narrow.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target, "id")
+    narrow = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")), "id")
     toks = narrow.select("id", tokens("__t").alias("v"))
     starts = F.when(
         F.size("v") >= k, F.sequence(F.lit(0), F.size("v") - k)

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_dts_connector_spark.session import spread
+
 SUPPORTED_FAKE_CODEC = "fake"
 
 #: metadata struct carried next to every media payload
@@ -57,20 +59,13 @@ CHEAP_SPREAD_MIN_ROWS_PER_CORE = 16 * 1024
 
 
 def _spread(df: DataFrame, rows: int | None = None, heavy: bool = True) -> DataFrame:
-    """Spread a (tiny) driver-of-work frame across the session's cores
-    before a per-row Python stage.
-
-    The fixture tables arrive as ONE parquet file with ONE row group, so a
-    scan plans a single input split and every attach→decode mapInPandas
-    chain downstream of it runs serially on one core (r13 measurement:
-    the whole codec family's bench cost ≈ per-doc encode+decode × |docs|
-    on one core). Repartitioning the id column (8 bytes/row) costs a
-    negligible shuffle and lets the payload encode/decode — the actual
-    work — run on every core. Scale-adaptive: the target is the session's
-    defaultParallelism, and a frame that already has at least that many
-    partitions (the 100 TB case, where the scan itself is thousands of
-    splits) passes through untouched, so this never REDUCES parallelism
-    and the shuffle only exists where the input was under-split.
+    """`session.spread` (round-robin) for a (tiny) driver-of-work frame
+    before a per-row Python stage: the single-split fixture scan would
+    otherwise run every attach→decode mapInPandas chain downstream of it
+    on one core (r13 measurement: the whole codec family's bench cost ≈
+    per-doc encode+decode × |docs| on one core). Repartitioning the id
+    column (8 bytes/row) costs a negligible shuffle and lets the payload
+    encode/decode — the actual work — run on every core.
 
     r14: ``heavy=False`` marks a per-doc stage in the µs class (BMP byte
     arithmetic, the fake decode, metadata-only plans); those spread only
@@ -78,13 +73,10 @@ def _spread(df: DataFrame, rows: int | None = None, heavy: bool = True) -> DataF
     CHEAP_SPREAD_MIN_ROWS_PER_CORE × cores — below it the exchange is a
     measured net loss. The early return also skips the plan→RDD partition
     probe entirely on the gated path."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if not heavy and (rows is None or rows < CHEAP_SPREAD_MIN_ROWS_PER_CORE * target):
         return df
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    return spread(df)
 
 
 def attach_media(

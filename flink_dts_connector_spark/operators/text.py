@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_dts_connector_spark.session import spread
+
 #: Marker stopwords for ratio/langid heuristics (tiny on purpose: the same
 #: list must be inlined in oracle SQL).
 STOPWORDS = ("the", "a", "of", "and")
@@ -187,9 +189,7 @@ def add_ngrams(
 
     toks_col, raw_col = f"__{out_col}_toks", f"__{out_col}_raw"
     if spread_by is not None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target, spread_by)
+        df = spread(df, spread_by)
     # tokens(null) would NPE inside NGram's Scala UDF; '' tokenizes to [""]
     # which n-grams (n>1) to [] — same result the expression path gives null.
     staged = df.withColumn(
@@ -277,10 +277,7 @@ def hash_embedding(
     # job here). Repartition the compact (id, text) rows once, only when
     # the input has fewer partitions than cores; a well-split scan passes
     # through untouched.
-    narrow = df.select(F.col(id_col), F.col(text_col).alias("__txt"))
-    target = narrow.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target, id_col)
+    narrow = spread(df.select(F.col(id_col), F.col(text_col).alias("__txt")), id_col)
     ex = narrow.select(
         F.col(id_col), F.explode(tokens("__txt")).alias("__t")
     ).select(
@@ -578,10 +575,9 @@ def rake_keywords(
     # core. Spread the compact (id, text) rows once, only when the input
     # has fewer partitions than cores; hash-partitioning by doc_id means
     # the island window right below reuses the partitioning.
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__txt"))
-    target = narrow.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target, "doc_id")
+    narrow = spread(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__txt")), "doc_id"
+    )
     toks = narrow.select(
         "doc_id",
         F.posexplode(tokens("__txt")).alias("i", "w"),

@@ -19,7 +19,7 @@ from flink_dts_connector_spark.operators import similarity as S
 from flink_dts_connector_spark.operators import text as X
 from flink_dts_connector_spark.plans import _snapshots as SNAP
 from flink_dts_connector_spark.plans.registry import register
-from flink_dts_connector_spark.session import load_table, table_rows
+from flink_dts_connector_spark.session import load_table, spread, table_rows
 
 # Shared DuckDB fragments -----------------------------------------------------
 
@@ -1494,10 +1494,7 @@ def curate_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring twice (r14 job drill: 0.42 s 1-task + 0.38 s legs). One
     # conditional hash repartition spreads the scoring AND gives both
     # consumers an identical Exchange subtree for ReuseExchange.
-    docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target, "doc_id")
+    docs = spread(t(spark, sf_dir, "documents").select("doc_id", "source", "text"), "doc_id")
     toks = X.token_count("text")
     non_alnum = F.length("text") - F.length(
         F.regexp_replace(F.col("text"), r"[^a-zA-Z0-9]", "")
@@ -2021,9 +2018,9 @@ def curate_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan+projection runs exactly once. A well-split input (the 100 TB
     # case) skips both the shuffle and the checkpoint entirely — N
     # parallel re-scans of a well-split table are the cheaper shape there.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target, "doc_id").localCheckpoint()
+    spread_docs = spread(docs, "doc_id")
+    if spread_docs is not docs:
+        docs = spread_docs.localCheckpoint()
     old = docs.where(F.col("doc_id") % 11 != 0)
     new = docs.where(F.col("doc_id") % 17 != 0).withColumn(
         "text",
@@ -5056,10 +5053,7 @@ def search_phrase_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both spreads the explode across cores AND gives the two consumers an
     # identical Exchange subtree, which ReuseExchange dedupes — the
     # explode now runs once.
-    d = t(spark, sf_dir, "documents").select("doc_id", F.col("text"))
-    target = d.sparkSession.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < target:
-        d = d.repartition(target, "doc_id")
+    d = spread(t(spark, sf_dir, "documents").select("doc_id", F.col("text")), "doc_id")
     d = d.select("doc_id", X.tokens("text").alias("toks"))
     sz = F.size("toks")
     idx = F.when(sz >= 3, F.sequence(F.lit(1), sz - 2)).otherwise(

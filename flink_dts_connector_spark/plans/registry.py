@@ -337,7 +337,7 @@ GATE_PRIORITY: tuple[str, ...] = (
     "multimodal_id3_metadata",
     # streaming (availableNow-bounded, rerun-safe) — r4: corpus ingestion
     # replaces stream_dedup_exactly_once (dropDuplicatesWithinWatermark is
-    # inside it, plus the dts source + gate + manifest composition)
+    # inside it, plus the raw-file stream + gate + manifest composition)
     "stream_funnel_stages",  # r4 cont.: stateful CEP sequence machine (hourly windows stays sweep-green)
     # r12 rotation: the streaming SemDeDup maintenance twin (r11-new,
     # named by the r11 verdict for gating: static k-means model, per-batch

@@ -259,12 +259,12 @@ def stream_partition_watermarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition watermark emulation (the reference's model,
     `DtsCustomWatermarkExtractor.java:17-21`, vs Spark's per-query global —
     SURVEY.md §4.4): a stateful operator tracks max event time PER KAFKA
-    PARTITION through the executor-parallel `format("dts")` stream source;
+    PARTITION through the raw-file stream (`read_stream_files`);
     the operator-level safe watermark is the MIN across partitions (Flink's
     multi-input rule), so a stalled partition holds progress back instead
     of losing data. Oracle reconstructs every partition's watermark in SQL."""
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
     from flink_dts_connector_spark.streaming.runner import run_to_memory
     from flink_dts_connector_spark.streaming.watermarks import (
         safe_watermark,
@@ -273,8 +273,7 @@ def stream_partition_watermarks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_dir = scratch_dir("fdcs_wm_raw_")
     generate_cdc_bytes(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(raw_dir)
-    register_dts_source(spark)
-    env = spark.readStream.format("dts").option("path", raw_dir).load()
+    env = read_stream_files(spark, raw_dir)
     per_part = track_partition_watermarks(env.select("kafka_partition", "ts"), delay_sec=600)
     sink = run_to_memory(
         per_part, output_mode="update", rows=table_rows(sf_dir, "orders")
@@ -307,19 +306,18 @@ SELECT * FROM expected WHERE n > 0
     tags=("streaming", "cdc"),
 )
 def stream_cdc_envelope_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC decode end-to-end: the executor-parallel
-    `readStream.format("dts")` source feeds an update-mode running
+    """Streaming CDC decode end-to-end: the raw-file stream
+    (`read_stream_files`) feeds an update-mode running
     aggregation per operation; the final totals (update sink is monotone —
     take the last emission per key) must equal the batch round-trip
     checksum. One query covers streaming source + stateful agg + codec."""
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
     from flink_dts_connector_spark.streaming.runner import run_to_memory
 
     raw_dir = scratch_dir("fdcs_cdc_raw_")
     generate_cdc_bytes(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(raw_dir)
-    register_dts_source(spark)
-    env = spark.readStream.format("dts").option("path", raw_dir).load()
+    env = read_stream_files(spark, raw_dir)
     agg = env.groupBy("operation").agg(
         F.count(F.lit(1)).alias("n"), F.sum("id").alias("id_sum")
     )
@@ -352,8 +350,8 @@ FROM uniq GROUP BY 1
 )
 def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CORPUS INGESTION — the two halves of the engine in one
-    query: a CDC document stream (the `format("dts")` executor-parallel
-    source over wire bytes, with every 5th doc delivered twice to model
+    query: a CDC document stream (`read_stream_files` over landed wire
+    bytes, with every 5th doc delivered twice to model
     at-least-once) flows through a quality gate (≥20 tokens, pipelined
     before the stateful op so dedup state holds only gate survivors) into
     streaming content dedup (`dropDuplicatesWithinWatermark` on the
@@ -371,21 +369,16 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalized,
         token_count,
     )
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
     from flink_dts_connector_spark.sources.generator import generate_doc_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
 
     raw_dir = scratch_dir("fdcs_doccdc_raw_")
     generate_doc_cdc_bytes(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(
         raw_dir
     )
-    register_dts_source(spark)
     with pinned_shuffle_partitions(spark):
-        env = (
-            spark.readStream.format("dts")
-            .option("path", raw_dir)
-            .option("tables", "corpus.documents")
-            .option("ops", "INSERT")
-            .load()
+        env = read_stream_files(
+            spark, raw_dir, tables=["corpus.documents"], ops=["INSERT"]
         )
         doc = env.select(F.element_at("after", "text").alias("text"), "ts")
         gated = doc.where(token_count("text") >= 20)
@@ -876,8 +869,8 @@ def stream_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_dts_connector_spark.operators import curation as C
     from flink_dts_connector_spark.operators import dedup as D
     from flink_dts_connector_spark.operators import text as X
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
     from flink_dts_connector_spark.sources.generator import generate_doc_delta_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
 
     docs = load_table(spark, sf_dir, "documents")
     cols = ["doc_id", "text", "source", "n_chars"]
@@ -932,7 +925,6 @@ def stream_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_dir = scratch_dir("fdcs_docdelta_raw_")
     ckpt = scratch_dir("fdcs_docdelta_ckpt_")
-    register_dts_source(spark)
     delta = generate_doc_delta_cdc_bytes(spark, sf_dir)
     with pinned_shuffle_partitions(spark):
         for wave in (0, 1, 2):  # three nightly deltas landing over time
@@ -940,10 +932,7 @@ def stream_incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "append"
             ).parquet(raw_dir)
             run_available_now(
-                spark.readStream.format("dts")
-                .option("path", raw_dir)
-                .option("tables", "corpus.documents")
-                .load()
+                read_stream_files(spark, raw_dir, tables=["corpus.documents"])
                 .writeStream.foreachBatch(apply_batch),
                 checkpoint=ckpt,
             )
@@ -1000,7 +989,7 @@ def stream_txn_atomic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     restarts, and state recovery in production reads those tables back,
     exactly as `SCALING.md` §incremental describes for the curation
     pipeline."""
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
     from flink_dts_connector_spark.sources.zoo import N_TXNS, generate_txn_bytes
 
     raw = generate_txn_bytes(spark, include_torn=True, commits=True)
@@ -1045,17 +1034,13 @@ def stream_txn_atomic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_dir = scratch_dir("fdcs_txnstream_raw_")
     ckpt = scratch_dir("fdcs_txnstream_ckpt_")
-    register_dts_source(spark)
     with pinned_shuffle_partitions(spark, rows=table_rows(sf_dir, "orders")):
         for wave in range(int(n_waves)):
             waved.where(F.col("wave") == wave).drop("wave").repartition(2).write.mode(
                 "append"
             ).parquet(raw_dir)
             run_available_now(
-                spark.readStream.format("dts")
-                .option("path", raw_dir)
-                .load()
-                .writeStream.foreachBatch(apply_batch),
+                read_stream_files(spark, raw_dir).writeStream.foreachBatch(apply_batch),
                 checkpoint=ckpt,
             )
 
@@ -1277,8 +1262,8 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stream_incremental_curate`)."""
     from flink_dts_connector_spark.formats.typed import project_table
     from flink_dts_connector_spark.plans.cdc_queries import ORDERS_CDC_SCHEMA
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
     from flink_dts_connector_spark.sources.generator import DB, TBL, generate_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
     from pyspark.sql import Window as W
 
     out_cols = [
@@ -1327,7 +1312,6 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_dir = scratch_dir("fdcs_scd2_raw_")
     ckpt = scratch_dir("fdcs_scd2_ckpt_")
-    register_dts_source(spark)
     raw = generate_cdc_bytes(spark, sf_dir)
     waves = [
         (F.col("offset") < 10000000000) & (F.col("offset") % 4 == 0),   # inserts
@@ -1338,10 +1322,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cond in waves:
             raw.where(cond).repartition(2).write.mode("append").parquet(raw_dir)
             run_available_now(
-                spark.readStream.format("dts")
-                .option("path", raw_dir)
-                .option("tables", f"{DB}.{TBL}")
-                .load()
+                read_stream_files(spark, raw_dir, tables=[f"{DB}.{TBL}"])
                 .writeStream.foreachBatch(apply_batch),
                 checkpoint=ckpt,
             )

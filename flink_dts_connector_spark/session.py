@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -130,6 +130,24 @@ def table_rows(sf_dir: str, name: str) -> int:
         n = pq.ParquetFile(path).metadata.num_rows
         _TABLE_ROWS_CACHE[path] = n
     return n
+
+
+def spread(df: DataFrame, *keys) -> DataFrame:
+    """Spread an under-split frame across the session's cores before a
+    costly per-row stage.
+
+    The fixture tables are one parquet file with one row group, so a scan
+    plans a single split and every stage downstream of it runs on one
+    core. A frame with fewer partitions than ``defaultParallelism`` is
+    repartitioned to that many: hash on ``keys`` when given (a later
+    exchange on the same keys can reuse it), round-robin otherwise. A frame
+    that already has enough partitions (the 100 TB case) comes back as the
+    same object, so this never reduces parallelism and the shuffle exists
+    only where the input was under-split."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    return df.repartition(target, *keys)
 
 
 _NANOS_COLS_CACHE: dict[str, tuple[str, ...]] = {}

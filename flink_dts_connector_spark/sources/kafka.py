@@ -9,9 +9,10 @@ Spark's Kafka source replaces the entire custom fetcher stack (partition
 discovery, offset state, handover threads — SURVEY.md §3.1): all that
 survives is this option builder and the decode step.
 
-No live Kafka exists in the test environment; `read_stream` is exercised in
-integration by substituting the file source (`sources/files.py`), which
-yields the identical downstream DataFrame shape.
+No live Kafka exists in the test environment; `read_stream` is exercised
+end to end over the in-process broker (`sources/fakebroker.py`), and
+`read_stream_files` streams landed raw-record files through the same
+decode, so both yield the same envelope shape.
 """
 
 from __future__ import annotations
@@ -104,7 +105,6 @@ def read_stream(
     group_starting_offsets: str | None = None,
     tables: list[str] | None = None,
     ops: list[str] | None = None,
-    available_now: bool = False,
     source_format: str = "kafka",
     extra: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -134,13 +134,22 @@ def read_stream(
     return decode_cdc(raw, tables=tables, ops=ops)
 
 
-def read_batch_files(
+#: the raw-record file layout every generator writes
+RAW_FILE_SCHEMA = "value binary, partition int, offset long"
+
+
+def read_stream_files(
     spark: SparkSession,
     path: str,
     tables: list[str] | None = None,
     ops: list[str] | None = None,
 ) -> DataFrame:
-    """Bounded variant over parquet files of raw records (value/partition/
-    offset) — the `trigger(availableNow)` test path."""
-    raw = spark.read.parquet(path)
+    """Streaming CDC envelope DataFrame from a directory of landed
+    raw-record parquet files (`RAW_FILE_SCHEMA`).
+
+    Spark's own file source does the discovery: its seen-files log in the
+    query checkpoint (compacted by Spark) makes a resumed query read only
+    the files that landed since its last run, and each file is split into
+    tasks like any parquet scan. Decode and filters are `decode_cdc`'s."""
+    raw = spark.readStream.schema(RAW_FILE_SCHEMA).parquet(path)
     return decode_cdc(raw, tables=tables, ops=ops)

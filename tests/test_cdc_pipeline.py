@@ -4,7 +4,6 @@ factories, failover glue, changelog kit unit behavior."""
 from __future__ import annotations
 
 import json
-import os
 
 from flink_dts_connector_spark.sources.kafka import dts_kafka_options
 from flink_dts_connector_spark.streaming.failover import (
@@ -117,33 +116,49 @@ def test_decode_column_pruning(spark, sf_dir):
     assert {r["n"] for r in sizes} == {1}
 
 
-def test_dts_python_datasource(spark, sf_dir, tmp_path):
-    """spark.read.format('dts') — the 'connector'='dts' SQL-surface parity:
-    must equal the direct decode pipeline, with filters honored."""
+def test_read_stream_files_matches_batch_decode(spark, sf_dir, tmp_path):
+    """read_stream_files over landed raw files, run into a memory sink,
+    equals decode_cdc of a batch read of the same files on every envelope
+    column (full-envelope multiset checksum), with the same schema, with
+    and without table/op filters."""
+    import uuid
+
     from flink_dts_connector_spark.formats.decoder import decode_cdc
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
-    from flink_dts_connector_spark.sources.generator import DB, TBL, generate_cdc_bytes
+    from flink_dts_connector_spark.formats.ingest import envelope_checksum
+    from flink_dts_connector_spark.sources.generator import (
+        DB,
+        DOC_DB,
+        DOC_TBL,
+        TBL,
+        generate_cdc_bytes,
+        generate_doc_cdc_bytes,
+    )
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
+    from flink_dts_connector_spark.streaming.runner import run_available_now
 
     raw_dir = str(tmp_path / "raw")
-    generate_cdc_bytes(spark, sf_dir).repartition(4).write.parquet(raw_dir)
-    register_dts_source(spark)
-
-    via_source = (
-        spark.read.format("dts")
-        .option("path", raw_dir)
-        .option("tables", f"{DB}.{TBL}")
-        .option("ops", "INSERT,DELETE")
-        .load()
-    )
-    direct = decode_cdc(
-        spark.read.parquet(raw_dir), tables=[f"{DB}.{TBL}"], ops=["INSERT", "DELETE"]
-    )
-    assert via_source.schema == direct.schema
-    a = {(r["id"], r["operation"]) for r in via_source.select("id", "operation").collect()}
-    b = {(r["id"], r["operation"]) for r in direct.select("id", "operation").collect()}
-    assert a == b and len(a) > 0
-    # multiple input partitions (one per file)
-    assert via_source.rdd.getNumPartitions() == 4
+    generate_cdc_bytes(spark, sf_dir).unionByName(
+        generate_doc_cdc_bytes(spark, sf_dir)
+    ).repartition(4).write.parquet(raw_dir)
+    n_all = None
+    for tables, ops in [
+        (None, None),
+        ([f"{DB}.{TBL}"], ["INSERT", "DELETE"]),
+        ([f"{DOC_DB}.{DOC_TBL}"], None),
+        (None, ["UPDATE"]),
+    ]:
+        stream = read_stream_files(spark, raw_dir, tables=tables, ops=ops)
+        name = f"rsf_{uuid.uuid4().hex[:10]}"
+        run_available_now(stream.writeStream.format("memory").queryName(name))
+        streamed = spark.table(name)
+        direct = decode_cdc(spark.read.parquet(raw_dir), tables=tables, ops=ops)
+        assert streamed.schema == direct.schema
+        got, want = envelope_checksum(streamed), envelope_checksum(direct)
+        assert got == want and got[0] > 0, (tables, ops, got, want)
+        if n_all is None:
+            n_all = got[0]
+        else:
+            assert got[0] < n_all, (tables, ops)  # the filter dropped rows
 
 
 def test_decode_on_error_skip(spark, sf_dir):
@@ -178,96 +193,40 @@ def test_decode_on_error_skip(spark, sf_dir):
         decode_cdc(mixed, on_error="ignore")
 
 
-def test_dts_datasource_streaming(spark, sf_dir, tmp_path):
-    """readStream.format('dts'): the streaming table-source parity path —
-    must deliver every record exactly once into the sink."""
+def test_read_stream_files_resumes_on_shared_checkpoint(spark, sf_dir, tmp_path):
+    """Two bounded runs of read_stream_files on one checkpoint, with files
+    appended between them: the file source's seen-files log makes the
+    second run read only the new files, and every record lands once."""
     from pyspark.sql import functions as F
 
-    from flink_dts_connector_spark.sources.dts_datasource import register_dts_source
+    from flink_dts_connector_spark.formats.decoder import decode_cdc
     from flink_dts_connector_spark.sources.generator import generate_cdc_bytes
+    from flink_dts_connector_spark.sources.kafka import read_stream_files
+    from flink_dts_connector_spark.streaming.runner import run_available_now
 
-    raw_dir = str(tmp_path / "raw")
-    generate_cdc_bytes(spark, sf_dir).repartition(3).write.parquet(raw_dir)
-    register_dts_source(spark)
+    raw = generate_cdc_bytes(spark, sf_dir)
+    raw_dir, ckpt = str(tmp_path / "raw"), str(tmp_path / "ckpt")
+    seen = []
 
-    import uuid
+    def collect(bdf, batch_id):
+        seen.extend(r["id"] for r in bdf.select("id").collect())
 
-    name = f"dts_{uuid.uuid4().hex[:10]}"
-    q = (
-        spark.readStream.format("dts")
-        .option("path", raw_dir)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["id"] for r in spark.table(name).select("id").collect()}
-    expected = {
-        r["id"]
-        for r in __import__(
-            "flink_dts_connector_spark.formats.decoder", fromlist=["decode_cdc"]
-        ).decode_cdc(spark.read.parquet(raw_dir)).select("id").collect()
-    }
-    assert got == expected and len(got) > 0
+    def run_wave(parity):
+        wave = raw.where(F.col("offset") % 2 == parity)
+        wave.repartition(2).write.mode("append").parquet(raw_dir)
+        progress = run_available_now(
+            read_stream_files(spark, raw_dir).writeStream.foreachBatch(collect),
+            checkpoint=ckpt,
+        )
+        return sum(p.numInputRows for p in progress), wave.count()
 
-
-def test_partitioned_stream_offsets_stay_compact(tmp_path):
-    """The executor-parallel reader's offset must be O(churn window), not
-    O(files ever consumed): files older than maxFileAgeSec relative to the
-    newest drop out of the explicit `recent` list (implicitly consumed via
-    the mtime watermark), with no re-reads and no gaps across batches."""
-    import time as _time
-
-    from flink_dts_connector_spark.sources.dts_datasource import (
-        DtsPartitionedStreamReader,
-    )
-
-    d = tmp_path / "raw"
-    d.mkdir()
-    now = _time.time()
-
-    def land(names, mtime):
-        for n in names:
-            p = d / n
-            p.write_bytes(b"")
-            os.utime(p, (mtime, mtime))
-
-    reader = DtsPartitionedStreamReader({"path": str(d), "maxfileagesec": "100"})
-
-    old = [f"old{i:02d}.parquet" for i in range(10)]
-    land(old, now - 1000)
-    start = reader.initialOffset()
-    end1 = reader.latestOffset()
-    batch1 = {p.path for p in reader.partitions(start, end1)}
-    assert batch1 == {str(d / n) for n in old}
-
-    new = [f"new{i:02d}.parquet" for i in range(10)]
-    land(new, now)
-    end2 = reader.latestOffset()
-    # watermark advanced past the old files: offset size is the churn
-    # window (10 names), not the full 20-file history
-    assert len(end2["recent"]) == 10
-    batch2 = {p.path for p in reader.partitions(end1, end2)}
-    assert batch2 == {str(d / n) for n in new}  # no re-reads, no gaps
-
-    # steady state: nothing new → empty batch, offset size unchanged
-    end3 = reader.latestOffset()
-    assert reader.partitions(end2, end3) == []
-    assert len(end3["recent"]) == 10
-
-    # restart: a FRESH reader (watermark state lost) must not re-read
-    # files the checkpointed start offset already consumed
-    r2 = DtsPartitionedStreamReader({"path": str(d), "maxfileagesec": "100"})
-    end4 = r2.latestOffset()
-    assert r2.partitions(end2, end4) == []
-
-    # the explicit guard: an end offset whose watermark retreated below
-    # start's must not resurrect implicitly-consumed files
-    stale_end = {"wm": end2["wm"] - 500, "recent": [str(d / old[0])]}
-    assert r2.partitions(end2, stale_end) == []
+    read0, n0 = run_wave(0)
+    assert read0 == n0 == len(seen) > 0
+    read1, n1 = run_wave(1)
+    assert read1 == n1 > 0  # only the new files were read
+    expected = [r["id"] for r in decode_cdc(raw).select("id").collect()]
+    assert len(seen) == len(set(seen)) == n0 + n1
+    assert sorted(seen) == sorted(expected)
 
 
 def test_fastdecode_parity():

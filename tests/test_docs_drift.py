@@ -183,6 +183,26 @@ def test_readme_codec_paragraph_matches_codec_inventory():
         assert not re.search(codec, real_clause, re.I), f"{codec!r} claimed real"
 
 
+def _package_nodes():
+    """(module path relative to the package, top-level function name or
+    ``<module>``, node) for every AST node of every package module, so a
+    node inside a nested closure or class is charged to the top-level
+    definition that holds it."""
+    import ast
+
+    pkg = os.path.join(REPO, "flink_dts_connector_spark")
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(root, f), pkg).replace(os.sep, "/")
+            tree = ast.parse(open(os.path.join(root, f)).read())
+            for top in tree.body:
+                owner = top.name if isinstance(top, ast.FunctionDef) else "<module>"
+                for node in ast.walk(top):
+                    yield rel, owner, node
+
+
 def test_bounded_runs_go_through_run_available_now():
     """Every bounded streaming run in the package goes through
     `streaming/runner.py:run_available_now` (one place that sets the
@@ -193,29 +213,56 @@ def test_bounded_runs_go_through_run_available_now():
     because a rate-capped ``availableNow`` run ends after one batch."""
     import ast
 
-    pkg = os.path.join(REPO, "flink_dts_connector_spark")
     allowed = {("plans/streaming_queries.py", "_group_resume_phase_dirs")}
     found = []
-    for root, _, files in os.walk(pkg):
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            rel = os.path.relpath(os.path.join(root, f), pkg).replace(os.sep, "/")
-            if rel == "streaming/runner.py":
-                continue
-            tree = ast.parse(open(os.path.join(root, f)).read())
-            # (top-level function, node) for every node, so a call inside a
-            # nested closure is charged to the function that defines it
-            owned = [
-                (top.name if isinstance(top, ast.FunctionDef) else "<module>", node)
-                for top in tree.body
-                for node in ast.walk(top)
-            ]
-            for owner, node in owned:
-                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
-                    continue
-                attr = node.func.attr
-                bounded = attr == "trigger" and any(k.arg == "availableNow" for k in node.keywords)
-                if (bounded or attr == "awaitTermination") and (rel, owner) not in allowed:
-                    found.append(f"{rel}:{node.lineno} ({owner}) .{attr}(")
+    for rel, owner, node in _package_nodes():
+        if rel == "streaming/runner.py":
+            continue
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        attr = node.func.attr
+        bounded = attr == "trigger" and any(k.arg == "availableNow" for k in node.keywords)
+        if (bounded or attr == "awaitTermination") and (rel, owner) not in allowed:
+            found.append(f"{rel}:{node.lineno} ({owner}) .{attr}(")
     assert not found, "hand-rolled bounded runs; use run_available_now:\n" + "\n".join(found)
+
+
+def test_only_the_fake_broker_hand_builds_a_stream_reader():
+    """Landed raw files stream through Spark's own file source
+    (`sources/kafka.py:read_stream_files`); the one Python stream reader in
+    the package is the in-process Kafka-wire stand-in
+    (`sources/fakebroker.py`). No other module subclasses
+    ``DataSourceStreamReader`` or ``SimpleDataSourceStreamReader``."""
+    import ast
+
+    readers = {"DataSourceStreamReader", "SimpleDataSourceStreamReader"}
+    found = [
+        f"{rel}:{node.lineno} class {node.name}"
+        for rel, _, node in _package_nodes()
+        if isinstance(node, ast.ClassDef)
+        and rel != "sources/fakebroker.py"
+        and any(
+            (b.id if isinstance(b, ast.Name) else getattr(b, "attr", None)) in readers
+            for b in node.bases
+        )
+    ]
+    assert not found, "hand-built stream readers; use read_stream_files:\n" + "\n".join(found)
+
+
+def test_partition_probe_only_in_spread():
+    """The under-split check (``.rdd.getNumPartitions()`` against
+    ``defaultParallelism``) lives in one helper, `session.py:spread`; every
+    other module calls it instead of copying the probe."""
+    import ast
+
+    found = [
+        f"{rel}:{node.lineno} ({owner})"
+        for rel, owner, node in _package_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "getNumPartitions"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "rdd"
+        and (rel, owner) != ("session.py", "spread")
+    ]
+    assert not found, "copied partition probes; use session.spread:\n" + "\n".join(found)
